@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Engine-wide session defaults shared by every driver-facing main
-  * (Bench / Probe / Verify / Stages / rehearsal mains).
+  * (Bench / Probe / Verify / Stages / rehearsal mains, the logger and
+  * dashboard CLIs).
   *
   * Round-13 optimization findings (OPTIMIZATION_r13.md, measured on the
   * 57-query alphabetical-prefix subset bench at sf0.1):
@@ -33,11 +34,21 @@ import org.apache.spark.sql.SparkSession
   * density is known — see [[graft.operators.Par]] — so every other
   * exchange keeps the byte-driven coalescing that bounds concurrent
   * memory. The env override remains for per-deployment tuning.
+  *
+  * The `file:` scheme resolves to [[graft.sinks.ForkFreeLocalFileSystem]]
+  * (and its `FileContext` twin): Hadoop's local filesystem minus the
+  * `chmod`/`readlink` process forks it falls back to without libhadoop,
+  * which were a large share of a logger poll's fixed write cost.
   */
 object EngineDefaults {
   def apply(b: SparkSession.Builder): SparkSession.Builder = {
-    val b1 = b.config("spark.sql.codegen.cache.maxEntries",
-      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
+    val b1 = b
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sinks.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sinks.ForkFreeLocalFs].getName)
+      .config("spark.sql.codegen.cache.maxEntries",
+        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
     sys.env.get("SPARK_GRAFT_MIN_PARTITION_SIZE") match {
       case Some(v) => b1.config(
         "spark.sql.adaptive.coalescePartitions.minPartitionSize", v)

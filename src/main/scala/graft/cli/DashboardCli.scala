@@ -22,7 +22,7 @@ object DashboardCli {
     val start = if (args.length > 3) args(3) else "1970-01-01 00:00:00"
     val end = if (args.length > 4) args(4) else "2100-01-01 00:00:00"
 
-    val builder0 = SparkSession.builder()
+    val builder0 = graft.EngineDefaults(SparkSession.builder())
     val spark = (if (sys.props.contains("spark.master")) builder0
       else builder0.master(sys.env.getOrElse("SPARK_MASTER", "local[*]")))
       .appName("purpleair-dashboard")

@@ -191,6 +191,25 @@ object DataLoggerCli {
     graft.streaming.ContinuousAggregate.retentionDrop(spark, aggDir,
       new java.sql.Timestamp(System.currentTimeMillis()), retainHours)
 
+  /** Retention ticks that failed since the JVM started. */
+  val retentionFailures = new java.util.concurrent.atomic.AtomicLong()
+
+  /** What the background timer runs: [[runRetentionOnce]], with a failure
+    * logged (directory, horizon, cause) and counted in
+    * [[retentionFailures]] — the next tick retries, and a throw out of a
+    * `TimerTask` would cancel the timer for good. */
+  def retentionTick(spark: SparkSession, aggDir: String,
+      retainHours: Int): Unit =
+    try { val _ = runRetentionOnce(spark, aggDir, retainHours) }
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        val n = retentionFailures.incrementAndGet()
+        log.warn(s"retention tick failed on $aggDir (horizon " +
+          s"$retainHours h; $n failures so far)", e)
+    }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** The full reference loop shape as ONE invocation — poll source (S5)
     * → flatten/zip → conform → 9-way fan-out (K1–K3/O3) plus, when
     * configured, the hourly continuous aggregate (A2) with its
@@ -263,8 +282,7 @@ object DataLoggerCli {
         val timer = new java.util.Timer("graft-retention", true)
         timer.scheduleAtFixedRate(new java.util.TimerTask {
           override def run(): Unit =
-            try { val _ = runRetentionOnce(spark, aggDir, c.retentionHours) }
-            catch { case _: Throwable => () }
+            retentionTick(spark, aggDir, c.retentionHours)
         }, 3600L * 1000L, 3600L * 1000L)
       }
       q
@@ -275,7 +293,7 @@ object DataLoggerCli {
   def main(args: Array[String]): Unit = {
     val c = parseArgs(args)
     // spark-submit provides the master on a cluster; default for bare runs
-    val builder0 = SparkSession.builder()
+    val builder0 = graft.EngineDefaults(SparkSession.builder())
     val builder = if (sys.props.contains("spark.master")) builder0
       else builder0.master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
     val spark = builder

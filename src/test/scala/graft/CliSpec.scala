@@ -41,6 +41,19 @@ class CliSpec extends SparkSpec {
       base.copy(dropExisting = true, assumeYes = true)))
   }
 
+  test("retention tick: a failure is counted and the tick returns") {
+    // a partition name retention cannot parse makes the drop throw
+    val agg = tmp("retention_bad")
+    new java.io.File(s"$agg/date=not-a-date").mkdirs()
+    val before = DataLoggerCli.retentionFailures.get()
+    DataLoggerCli.retentionTick(spark, agg, retainHours = 8)
+    assert(DataLoggerCli.retentionFailures.get() == before + 1)
+    // a healthy tick is not counted
+    val ok = tmp("retention_ok")
+    DataLoggerCli.retentionTick(spark, ok, retainHours = 8)
+    assert(DataLoggerCli.retentionFailures.get() == before + 1)
+  }
+
   test("streaming e2e: poll → conform → 9-way fan-out → hourly aggregate " +
       "→ retention, one CLI invocation (S5/A2/T5/K3)") {
     val outDir = tmp("cli_out")

@@ -273,6 +273,25 @@ class GraphSpec extends SparkSpec {
       s"got $out")
   }
 
+  test("adamicAdarTopK: the plan behind the sealed top-k broadcasts its " +
+    "side tables, ends in TakeOrderedAndProject, no cartesian") {
+    // The operator seals its result (Lifetime.seal = an eager local
+    // checkpoint), so the registered plan is a checkpoint scan; the shape
+    // that computed the top-k is the plan the seal's checkpoint ran.
+    def isSeal(plan: String) = plan.contains("TakeOrderedAndProject")
+    val pairs = Seq.tabulate(120)(i => (i.toLong % 17, 17L + i.toLong % 23))
+    val e = (pairs ++ pairs.map(_.swap)).distinct.toDF("src", "dst")
+    val checkpointed = finishedExecutions {
+      case ("localCheckpoint", qe) => qe.executedPlan.toString
+    }(_.exists(isSeal)) {
+      Graph.adamicAdarTopK(e, maxDeg = 128L, topK = 20)
+    }
+    val lp = checkpointed.find(isSeal).getOrElse(fail("no checkpoint ran " +
+      s"a TakeOrderedAndProject; saw:\n${checkpointed.mkString("\n")}"))
+    assert(lp.contains("BroadcastHashJoin") &&
+      !lp.contains("CartesianProduct"), s"linkpred:\n$lp")
+  }
+
   test("clusteringCoefficientBands: triangle at 1, open wedge at 0, " +
     "deg-1 and hub nodes out") {
     // triangle 1-2-3 plus path 4-5-6: lcc(1..3) = 1 (band 10), node 5

@@ -1,12 +1,38 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session per suite. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String) = s"/root/testdata/sf0.001/$name.parquet"
+
+  /** Runs `body`, then collects `keep` over the (action name, query
+    * execution) of every query it finished, until `enough` holds or 30 s
+    * pass — listener events arrive asynchronously. For asserting on a
+    * plan an operator executes but does not return. */
+  def finishedExecutions[A](keep: PartialFunction[(String, QueryExecution), A])(
+      enough: Seq[A] => Boolean)(body: => Unit): Seq[A] = {
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[A]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        keep.lift((funcName, qe)).foreach(seen.add)
+      def onFailure(funcName: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!enough(seen.asScala.toSeq) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      seen.asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
 }
 
 object SparkSpec {

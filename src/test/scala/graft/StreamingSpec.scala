@@ -492,6 +492,73 @@ class FanOutSinkSpec extends SparkSpec {
     }
   }
 
+  test("a failed table write fails the micro-batch after the other " +
+    "writers finish; replaying the batchId converges") {
+    import spark.implicits._
+    // The nine writes run concurrently. One that fails — here a plain
+    // file sits where its table directory goes — fails the micro-batch
+    // with that table's error, but only after the other eight writers
+    // are done, and the batch's cache is released.
+    val conformed = Transforms.conform(Seq(
+      (1700000000L, 7L, "a"), (1700000000L, 7L, "a"), (1700003600L, 8L, "b"))
+      .toDF("data_time_stamp", "sensor_index", "name"))
+    val base = Files.createTempDirectory("graft_sink_f").toString
+    // the first table in write order, so an early return would show
+    val blocked = FieldCatalog.Groups.all.head
+    val blocker = new java.io.File(s"$base/$blocked")
+    assert(blocker.createNewFile())
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val err = intercept[Exception] {
+      FanOutSink.writeBatch(conformed, base, batchId = Some(8L))
+    }
+    val chain = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(String.valueOf).mkString(" <- ")
+    assert(chain.contains(blocked), s"not $blocked's error: $chain")
+    FieldCatalog.Groups.all.filterNot(_ == blocked).foreach { table =>
+      assert(new java.io.File(s"$base/$table/batch=8/_SUCCESS").isFile,
+        s"$table's writer had not finished when the batch failed")
+    }
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore)
+      .isEmpty, "the failed batch left its cache behind")
+    // the cause removed, replaying batch 8 converges to the nine tables
+    assert(blocker.delete())
+    FanOutSink.writeBatch(conformed, base, batchId = Some(8L))
+    FieldCatalog.Groups.all.foreach { table =>
+      val back = FanOutSink.readTable(spark, base, table)
+      assert(back.count() == 2, s"$table did not converge on replay")
+      assert(back.select("sensor_index").as[Int].collect().sorted.toSeq ==
+        Seq(7, 8), table)
+    }
+  }
+
+  test("fan-out dedup and layout share one exchange") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Plans extends AdaptiveSparkPlanHelper {
+      // the table writes read the batch's cache: count inside it too
+      def shuffles(p: SparkPlan): Int = collect(p) {
+        case _: ShuffleExchangeExec => 1
+        case m: InMemoryTableScanExec => shuffles(m.relation.cachedPlan)
+      }.sum
+    }
+    val base = Files.createTempDirectory("graft_sink_x").toString
+    val conformed = Transforms.conform(Seq(
+      (1700000000L, 7L, "a"), (1700000000L, 7L, "b"), (1700003600L, 8L, "c"))
+      .toDF("data_time_stamp", "sensor_index", "name"))
+    val tables = FieldCatalog.Groups.all.size
+    val counts = finishedExecutions {
+      case (_, qe) if qe.toString.contains(base) =>
+        Plans.shuffles(qe.executedPlan)
+    }(_.size >= tables) {
+      FanOutSink.writeBatch(conformed, base, batchId = Some(0L))
+    }
+    assert(counts.size == tables && counts.forall(_ == 1),
+      s"shuffles per table write: $counts")
+  }
+
   test("PK dedup survivor is stable across partition layouts") {
     import spark.implicits._
     val rows = Seq(
