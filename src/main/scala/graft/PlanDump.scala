@@ -29,10 +29,9 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
       val txt =
         try {
-          val df = fn(spark, sfDir)
+          val df = SparkEntry.queries(name)(spark, sfDir)
           val qe = df.queryExecution
           // formatted physical plan (the committed evidence); for
           // operators whose result is a localCheckpoint the interesting

@@ -1,14 +1,39 @@
 package graft.sinks
 
-import java.util.concurrent.{CompletableFuture, CompletionException,
-  ExecutorService, Executors}
+import java.io.IOException
+import java.nio.file.FileAlreadyExistsException
+import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapred.JobConf
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
+  UnsafeProjection}
 import org.apache.spark.sql.classic.ClassicConversions
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.connector.catalog.{Column, SupportsWrite, Table,
+  TableCapability, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter,
+  DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write,
+  WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.execution.datasources.{DataSource, FileFormat,
+  OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.v2.FileDataSourceV2
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DateType, LongType, StringType,
+  StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.schema.FieldCatalog
 import graft.transform.Transforms
@@ -44,14 +69,20 @@ import graft.transform.Transforms
   * '''Per-batch cost.''' Each micro-batch writes 9× small column groups
   * instead of one wide table — the reference's write amplification, paid
   * as a fixed cost per table rather than per row. [[writeBatch]] keeps
-  * that fixed cost down three ways:
+  * that fixed cost to one job:
   *  - one exchange: `repartition(sensor_index)` runs before the dedup
   *    window, whose (ts, sensor) key it already clusters, so the window
   *    and the layout share that single shuffle;
-  *  - overlapped writes: the deduped batch is cached and materialized
-  *    once, then the nine projections are written concurrently, each on
-  *    its own thread under the caller's job group, so a micro-batch costs
-  *    about its slowest table write rather than the sum of nine;
+  *  - one write job: after the exchange each task reads its sorted
+  *    partition once and writes all nine projections side by side, one
+  *    file per (table, date), through each table's own `FileFormat`
+  *    writer ([[FanOutSource]]) — no cache, no per-table query plan, no
+  *    per-table job;
+  *  - staged commit: tasks write under the hidden
+  *    `<baseDir>/.fanout-staging/<batch>/<table>/`, and the job's
+  *    commit renames each staged table to `<table>/batch=<id>/` (or
+  *    merges it into `<table>/` without a batch id), so readers never see
+  *    a half-written run; a failed job deletes its staging directory;
   *  - fork-free local files: sessions built through
   *    [[graft.EngineDefaults]] resolve `file:` to
   *    [[ForkFreeLocalFileSystem]], which sets permissions and answers
@@ -63,70 +94,28 @@ object FanOutSink {
   /** Batch-side fan-out: write all 9 projections of `conformed` under
     * `baseDir/<table>/` with the partitioned+sorted layout. When
     * `batchId` is set the write goes to `<table>/batch=<id>/` with
-    * Overwrite semantics (the streaming replay-safe path). */
+    * Overwrite semantics (the streaming replay-safe path); otherwise
+    * `mode` applies to each table directory as a `DataFrameWriter` save
+    * would apply it. `format` is a file format (`parquet`, `csv`). */
   def writeBatch(conformed: DataFrame, baseDir: String,
       format: String = "parquet", mode: SaveMode = SaveMode.Append,
-      batchId: Option[Long] = None): Unit = {
+      batchId: Option[Long] = None): Unit =
     // Hashing on the sensor already clusters the (ts, sensor) dedup key,
     // so the dedup window reuses this exchange instead of adding one.
-    val deduped = Transforms
+    Transforms
       .dedupByKey(conformed.repartition(col(FieldCatalog.keySensor)),
         Transforms.stableDedupOrder(conformed))
       .withColumn("date", to_date(col(FieldCatalog.keyTimestamp)))
       .sortWithinPartitions(col(FieldCatalog.keyTimestamp))
-      .persist()
-    val (effMode, suffix) = batchId match {
-      case Some(id) => (SaveMode.Overwrite, s"/batch=$id")
-      case None     => (mode, "")
-    }
-    try {
-      // Build the cache once, before the writers share it (racing
-      // writers would each build it).
-      deduped.write.format("noop").mode(SaveMode.Overwrite).save()
-      val session = ClassicConversions.castToImpl(deduped.sparkSession)
-      val writes = FieldCatalog.Groups.all.map { table =>
-        // Carries the caller's job group and local properties to the
-        // writer thread, so query cancellation reaches every write.
-        SQLExecution.withThreadLocalCaptured(session, writers) {
-          val cols = (FieldCatalog.keyCols ++ FieldCatalog.groupCols(table))
-            .map(col) :+ col("date")
-          val w = deduped.select(cols: _*).write
-            .mode(effMode).partitionBy("date")
-            .option("compression", if (format == "parquet") "zstd" else "none")
-          val path = s"$baseDir/$table$suffix"
-          format match {
-            case "parquet" => w.parquet(path)
-            case "csv" => w.option("header", "true").csv(path)
-            case other => w.format(other).save(path)
-          }
-        }
-      }
-      awaitAll(writes)
-    } finally deduped.unpersist()
-  }
-
-  /** Threads for one micro-batch's concurrent table writes; idle ones
-    * retire after a minute. */
-  private lazy val writers: ExecutorService = Executors.newCachedThreadPool {
-    (r: Runnable) =>
-      val t = new Thread(r, "graft-fanout-writer")
-      t.setDaemon(true)
-      t
-  }
-
-  /** Waits for every write — also after one has failed, so nothing still
-    * reads the cache when the caller unpersists it — then rethrows the
-    * first failure in table order, with the others suppressed into it. */
-  private def awaitAll(writes: Seq[CompletableFuture[Unit]]): Unit = {
-    val failures = writes.flatMap { f =>
-      try { f.join(); None }
-      catch { case e: CompletionException => Some(e.getCause) }
-    }
-    failures.headOption.foreach { first =>
-      failures.tail.foreach(first.addSuppressed)
-      throw first
-    }
-  }
+      .write.format(classOf[FanOutSource].getName)
+      .option(FanOutSource.BaseDir, baseDir)
+      .option(FanOutSource.Format, format)
+      .option(FanOutSource.Mode,
+        batchId.fold(mode)(_ => SaveMode.Overwrite).name)
+      .options(batchId.map(FanOutSource.Batch -> _.toString).toMap)
+      // Spark sees an append; the sink applies `mode` per table itself.
+      .mode(SaveMode.Append)
+      .save()
 
   /** Streaming fan-out: `foreachBatch` at the reference's 65 s cadence
     * (T1). File formats take the replay-safe `batch=<id>`/Overwrite path;
@@ -229,12 +218,17 @@ object FanOutSink {
   /** Read one partition table back with partition pruning intact. Batch
     * and date partition columns discovered from the layout are dropped /
     * kept respectively — `batch` is a physical detail of replay safety,
-    * `date` is the hypertable time-partition key. */
+    * `date` is the hypertable time-partition key. The catalog schema
+    * stands in for footer inference, so building the reader lists the
+    * directory and runs no Spark job; `batch` reads as a string because
+    * run names are both numeric (`batch=7`) and not (`batch=c1x3`). */
   def readTable(spark: org.apache.spark.sql.SparkSession, baseDir: String,
-      table: String): DataFrame = {
-    val df = spark.read.parquet(s"$baseDir/$table")
-    if (df.columns.contains("batch")) df.drop("batch") else df
-  }
+      table: String): DataFrame =
+    spark.read
+      .schema(FieldCatalog.groupSchema(table)
+        .add("date", DateType).add("batch", StringType))
+      .parquet(s"$baseDir/$table")
+      .drop("batch")
 
   /** Read a CSV fan-out table back with the CATALOG schema (never
     * inference — a cold date partition with all-null readings would
@@ -307,7 +301,8 @@ object FanOutSink {
     *
     * Crash safety on plain parquet: each merge writes to a hidden
     * staging dir (invisible to readers), renames it into place, and only
-    * then deletes its sources. A crash before the rename leaves an
+    * then deletes its sources; a rename that fails throws and deletes
+    * nothing. A crash before the rename leaves an
     * orphan staging dir (cleaned on the next run, nothing lost or
     * duplicated); a crash after it leaves duplicates until the next run
     * folds them again — never data loss. A transactional table format
@@ -339,8 +334,11 @@ object FanOutSink {
         .write.mode(SaveMode.Overwrite).partitionBy("date")
         .option("compression", "zstd")
         .parquet(staging.toString)
-      fs.rename(staging,
-        new org.apache.hadoop.fs.Path(dir, s"batch=c${level}x$nextId"))
+      val target = new Path(dir, s"batch=c${level}x$nextId")
+      // The sources go only once their rows are in place.
+      if (fs.exists(target) || !fs.rename(staging, target))
+        throw new IOException(s"compact $table: could not move $staging " +
+          s"to $target; its sources and the staging dir are kept")
       nextId += 1
       sources.foreach(s => fs.delete(s.path, true))
     }
@@ -376,4 +374,240 @@ object FanOutSink {
   def compactAll(spark: org.apache.spark.sql.SparkSession,
       baseDir: String, fanout: Int = 8): Int =
     FieldCatalog.Groups.all.map(compact(spark, baseDir, _, fanout)).sum
+}
+
+/** The write half of [[FanOutSink.writeBatch]] as a DataSource V2 batch
+  * sink, so the nine tables cost one Spark job: each task writes its
+  * sorted partition once, through one `OutputWriter` per (table, date)
+  * from that table's `FileFormat.prepareWrite`, into a hidden staging
+  * directory under the base directory; the job's commit renames each
+  * staged table into place. Spark owns the task, commit-coordination and
+  * abort lifecycle, the SQL execution and the caller's job properties. */
+private[sinks] final class FanOutSource extends TableProvider {
+  override def supportsExternalMetadata(): Boolean = true
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    new StructType()
+  override def getTable(inputSchema: StructType, partitioning: Array[Transform],
+      options: java.util.Map[String, String]): Table =
+    new SupportsWrite {
+      override def name(): String =
+        s"fan-out ${options.get(FanOutSource.BaseDir)}"
+      override def columns(): Array[Column] = inputSchema.fields.map(f =>
+        Column.create(f.name, f.dataType, f.nullable))
+      override def capabilities(): java.util.Set[TableCapability] =
+        java.util.EnumSet.of(TableCapability.BATCH_WRITE,
+          TableCapability.ACCEPT_ANY_SCHEMA)
+      override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+        new WriteBuilder {
+          override def build(): Write = new Write {
+            override def toBatch: BatchWrite = new FanOutBatchWrite(info)
+          }
+        }
+    }
+}
+
+private[sinks] object FanOutSource {
+  val BaseDir = "baseDir"
+  val Format = "format"
+  val Mode = "saveMode"
+  val Batch = "batchId"
+}
+
+/** One table's share of the write: its columns bound to the input row,
+  * its file schema, its writer factory, and the Hadoop settings its
+  * `prepareWrite` made over the session's. */
+private final case class FanOutTable(name: String,
+    columns: Seq[BoundReference], dataSchema: StructType,
+    factory: OutputWriterFactory, conf: Map[String, String])
+
+/** Staged files of one committed task, relative to the staging dir. */
+private final case class FanOutCommit(files: Seq[String])
+    extends WriterCommitMessage
+
+/** Planning and commit of one fan-out write. The save mode is resolved per table
+  * before the job runs: `ErrorIfExists` fails on an existing table
+  * directory, `Ignore` leaves it out of the job, `Overwrite` replaces it
+  * at commit and `Append` merges into it. */
+private final class FanOutBatchWrite(info: LogicalWriteInfo)
+    extends BatchWrite {
+  private val session = ClassicConversions.castToImpl(SparkSession.active)
+  private val opts = info.options
+  private val mode = SaveMode.valueOf(opts.get(FanOutSource.Mode))
+  private val run = Option(opts.get(FanOutSource.Batch)).map(id => s"batch=$id")
+  private val base = new Path(opts.get(FanOutSource.BaseDir))
+  private val fs = base.getFileSystem(session.sessionState.newHadoopConf())
+  // Keyed by the batch, so a replay clears what a crashed attempt left.
+  private val stage = fs.makeQualified(new Path(base,
+    s".fanout-staging/${run.getOrElse(info.queryId)}"))
+
+  private def target(table: String): Path =
+    run.fold(new Path(base, table))(new Path(new Path(base, table), _))
+
+  private val tables = FieldCatalog.Groups.all.filter { t =>
+    mode match {
+      case SaveMode.ErrorIfExists if fs.exists(target(t)) =>
+        throw new FileAlreadyExistsException(
+          s"fan-out table $t: ${target(t)} already exists")
+      case SaveMode.Ignore => !fs.exists(target(t))
+      case _ => true
+    }
+  }
+
+  override def createBatchWriterFactory(
+      physical: PhysicalWriteInfo): DataWriterFactory = {
+    fs.delete(stage, true)
+    val format = opts.get(FanOutSource.Format)
+    val options = Map("compression" ->
+      (if (format == "parquet") "zstd" else "none")) ++
+      (if (format == "csv") Map("header" -> "true") else Map.empty)
+    val fileFormat = DataSource.lookupDataSource(format, session.sessionState.conf)
+      .getDeclaredConstructor().newInstance() match {
+        case f: FileFormat => f
+        case v2: FileDataSourceV2 =>
+          v2.fallbackFileFormat.getDeclaredConstructor().newInstance()
+        case _ => throw new IllegalArgumentException(
+          s"fan-out format $format is not a file format")
+      }
+    val conf = session.sessionState.newHadoopConfWithOptions(options)
+    val schema = info.schema
+    val specs = tables.map { t =>
+      val cols = FieldCatalog.keyCols ++ FieldCatalog.groupCols(t)
+      val dataSchema = StructType(cols.map(schema(_)))
+      val job = Job.getInstance(conf)
+      val factory = fileFormat.prepareWrite(session, job, options, dataSchema)
+      val overrides = job.getConfiguration.iterator.asScala
+        .filter(e => conf.getRaw(e.getKey) != e.getValue)
+        .map(e => e.getKey -> e.getValue).toMap
+      val columns = cols.map(schema.fieldIndex).map(i =>
+        BoundReference(i, schema(i).dataType, schema(i).nullable))
+      FanOutTable(t, columns, dataSchema, factory, overrides)
+    }
+    new FanOutWriterFactory(stage.toString, specs, schema.fieldIndex("date"),
+      session.sessionState.conf.sessionLocalTimeZone,
+      new SerializableConfiguration(conf), info.queryId.replace("-", ""))
+  }
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val committed = messages.iterator
+      .flatMap { case FanOutCommit(files) => files; case _ => Nil }
+      .map(new Path(stage, _)).toSet
+    tables.foreach { t =>
+      val staged = new Path(stage, t)
+      try {
+        if (mode == SaveMode.Overwrite) fs.delete(target(t), true)
+        if (fs.exists(staged)) {
+          // Files of task attempts that died without aborting.
+          val files = fs.listFiles(staged, true)
+          while (files.hasNext) {
+            val p = files.next().getPath
+            if (!committed(p)) fs.delete(p, false)
+          }
+          move(staged, target(t))
+        } else fs.mkdirs(target(t))
+      } catch {
+        case NonFatal(e) => throw new IOException(
+          s"fan-out table $t: commit to ${target(t)} failed", e)
+      }
+    }
+    fs.delete(stage, true)
+  }
+
+  override def abort(messages: Array[WriterCommitMessage]): Unit = {
+    val _ = fs.delete(stage, true)
+  }
+
+  /** Renames `from` to `to`, merging into directories that exist. */
+  private def move(from: Path, to: Path): Unit =
+    if (fs.exists(to))
+      fs.listStatus(from).foreach(s =>
+        move(s.getPath, new Path(to, s.getPath.getName)))
+    else if (!fs.mkdirs(to.getParent) || !fs.rename(from, to))
+      throw new IOException(s"could not move $from to $to")
+}
+
+private final class FanOutWriterFactory(val stage: String,
+    val tables: Seq[FanOutTable], val dateOrdinal: Int, val timeZone: String,
+    val conf: SerializableConfiguration, val jobId: String)
+    extends DataWriterFactory {
+  override def createWriter(partitionId: Int,
+      taskId: Long): DataWriter[InternalRow] =
+    new FanOutDataWriter(this, partitionId)
+}
+
+/** One task's writer. The rows arrive sorted by time, so a date's rows
+  * are contiguous: the nine files of a date stay open until the date
+  * changes. */
+private final class FanOutDataWriter(f: FanOutWriterFactory, partitionId: Int)
+    extends DataWriter[InternalRow] {
+  private val attempt = {
+    val task = TaskContext.get()
+    new TaskAttemptID(new TaskID(new JobID(f.jobId, task.stageId()),
+      TaskType.MAP, partitionId), task.attemptNumber())
+  }
+
+  private final class Part(val spec: FanOutTable) {
+    val context = {
+      val conf = new JobConf(f.conf.value)
+      spec.conf.foreach { case (k, v) => conf.set(k, v) }
+      new TaskAttemptContextImpl(conf, attempt)
+    }
+    val project = UnsafeProjection.create(spec.columns)
+    val extension = spec.factory.getFileExtension(context)
+  }
+  private val parts = f.tables.map(new Part(_)).toArray
+  private val dateString = Cast(BoundReference(f.dateOrdinal, DateType,
+    nullable = true), StringType, Some(f.timeZone))
+  private val stage = new Path(f.stage)
+  private val files = ArrayBuffer.empty[String]
+  private val open = ArrayBuffer.empty[OutputWriter]
+  private var day = 0L
+
+  override def write(row: InternalRow): Unit = {
+    val d = if (row.isNullAt(f.dateOrdinal)) Long.MinValue
+      else row.getInt(f.dateOrdinal).toLong
+    if (open.isEmpty || d != day) openDay(row, d)
+    var i = 0
+    try while (i < parts.length) {
+      open(i).write(parts(i).project(row))
+      i += 1
+    } catch {
+      case NonFatal(e) => throw new IOException(
+        s"fan-out table ${parts(i).spec.name}: write failed", e)
+    }
+  }
+
+  private def openDay(row: InternalRow, d: Long): Unit = {
+    closeFiles()
+    day = d
+    val dir = ExternalCatalogUtils.getPartitionPathString("date",
+      Option(dateString.eval(row)).map(_.toString).orNull)
+    // Unique per open, so a retried task never meets an earlier file.
+    val fileName = f"part-$partitionId%05d-${UUID.randomUUID()}.c000"
+    parts.foreach { p =>
+      val rel = s"${p.spec.name}/$dir/$fileName${p.extension}"
+      files += rel
+      try open += p.spec.factory.newInstance(
+        new Path(stage, rel).toString, p.spec.dataSchema, p.context)
+      catch {
+        case NonFatal(e) => throw new IOException(
+          s"fan-out table ${p.spec.name}: cannot open $rel", e)
+      }
+    }
+  }
+
+  private def closeFiles(): Unit = try open.foreach(_.close()) finally open.clear()
+
+  override def commit(): WriterCommitMessage = {
+    closeFiles()
+    FanOutCommit(files.toList)
+  }
+
+  override def abort(): Unit = {
+    open.foreach(w => try w.close() catch { case NonFatal(_) => })
+    open.clear()
+    val fs = stage.getFileSystem(f.conf.value)
+    files.foreach(rel => fs.delete(new Path(stage, rel), false))
+  }
+
+  override def close(): Unit = closeFiles()
 }

@@ -200,17 +200,31 @@ class HttpPollingFetcher extends SensorFetcher {
   private def get(url: String, options: Map[String, String]): String = {
     val conn = new java.net.URL(url).openConnection()
       .asInstanceOf[java.net.HttpURLConnection]
-    conn.setRequestProperty("X-API-Key", options("api.key"))
-    val code = conn.getResponseCode
-    if (!SuccessCodes.contains(code))
-      throw new RuntimeException(s"PurpleAir request failed: HTTP $code for $url")
-    scala.io.Source.fromInputStream(conn.getInputStream).mkString
+    try {
+      conn.setConnectTimeout(ConnectTimeoutMs)
+      conn.setReadTimeout(ReadTimeoutMs)
+      conn.setRequestProperty("X-API-Key", options("api.key"))
+      val code = conn.getResponseCode
+      if (!SuccessCodes.contains(code)) {
+        Option(conn.getErrorStream).foreach(_.close())
+        val kind = if (ErrorCodes.contains(code)) "client error" else "error"
+        throw new RuntimeException(
+          s"PurpleAir request failed: $kind HTTP $code for $url")
+      }
+      val in = conn.getInputStream
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    } finally conn.disconnect()
   }
 }
 
 object HttpPollingFetcher {
   val SuccessCodes = Set(200, 201)
   val ErrorCodes = Set(400, 403, 404)
+  /** Fixed so a stalled server fails one poll instead of hanging the
+    * stream; the read bound stays under the 65 s poll cadence. */
+  val ConnectTimeoutMs = 10000
+  val ReadTimeoutMs = 30000
   private def base(options: Map[String, String]) =
     options.getOrElse("api.base", "https://api.purpleair.com/v1")
   /** `?k=v&k2=v2` for non-null params, like `PurpleAirAPI.py:317-329`

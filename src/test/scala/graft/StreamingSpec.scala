@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -203,7 +204,8 @@ class PollingSourceSpec extends SparkSpec {
       assert(sensorsUri.startsWith("/v1/sensors/?"))
       assert(sensorsUri.contains("modified_since=1659710000"))
       assert(sensorsUri.contains("fields=pm2.5"))
-      // reference error mapping: 400/403/404 raise, with the code visible
+      // reference error mapping: 400/403/404 raise as client errors,
+      // naming the status and the URL asked for
       Seq(
         (s"$base".replace("/v1", "/v1/forbidden"), "403",
           (o: Map[String, String]) => f.validate(o + ("api.base" ->
@@ -214,11 +216,13 @@ class PollingSourceSpec extends SparkSpec {
         (s"$base".replace("/v1", "/v1/bad"), "400",
           (o: Map[String, String]) => f.fetch(0L, 1L, o + ("api.base" ->
             s"${base.replace("/v1", "/v1/bad")}")))
-      ).foreach { case (_, code, call) =>
+      ).foreach { case (urlBase, code, call) =>
         val ex = intercept[RuntimeException] {
           call(Map("api.key" -> "SECRET-KEY"))
         }
-        assert(ex.getMessage.contains(s"HTTP $code"), s"expected $code")
+        assert(ex.getMessage.contains(s"client error HTTP $code"),
+          s"expected $code: ${ex.getMessage}")
+        assert(ex.getMessage.contains(urlBase), ex.getMessage)
       }
     } finally server.stop(0)
   }
@@ -492,71 +496,297 @@ class FanOutSinkSpec extends SparkSpec {
     }
   }
 
-  test("a failed table write fails the micro-batch after the other " +
-    "writers finish; replaying the batchId converges") {
+  /** Three conformed readings over two UTC days, one duplicate key. */
+  private def synthetic(sensorOffset: Int = 0) = {
     import spark.implicits._
-    // The nine writes run concurrently. One that fails — here a plain
-    // file sits where its table directory goes — fails the micro-batch
-    // with that table's error, but only after the other eight writers
-    // are done, and the batch's cache is released.
-    val conformed = Transforms.conform(Seq(
-      (1700000000L, 7L, "a"), (1700000000L, 7L, "a"), (1700003600L, 8L, "b"))
+    Transforms.conform(Seq(
+      (1700000000L, 7 + sensorOffset, "a"), (1700000000L, 7 + sensorOffset, "b"),
+      (1700003600L, 8 + sensorOffset, "c"), (1700090000L, 9 + sensorOffset, "d"))
       .toDF("data_time_stamp", "sensor_index", "name"))
-    val base = Files.createTempDirectory("graft_sink_f").toString
-    // the first table in write order, so an early return would show
-    val blocked = FieldCatalog.Groups.all.head
-    val blocker = new java.io.File(s"$base/$blocked")
-    assert(blocker.createNewFile())
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val err = intercept[Exception] {
-      FanOutSink.writeBatch(conformed, base, batchId = Some(8L))
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+    .map(_.toSeq).sortBy(_.mkString("|"))
+
+  /** Files under `dir` that are not hidden (`.crc`, `_SUCCESS`, staging). */
+  private def visibleFiles(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.listFiles()).toSeq.flatten
+      .filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
+      .flatMap(f => if (f.isDirectory) visibleFiles(f) else Seq(f))
+
+  /** Runs `body`, then counts the jobs started under `group` and the SQL
+    * executions it started, once the listener bus has delivered every
+    * earlier event. */
+  private def jobsAndExecutions(group: String)(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val execs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val drainJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val token = s"drain-${java.util.UUID.randomUUID()}"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`token`) => drainJobs.add(e.jobId)
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (drainJobs.contains(e.jobId)) drained.countDown()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart
+            if x.jobGroupId.contains(group) => execs.incrementAndGet()
+        case _ =>
+      }
     }
-    val chain = Iterator.iterate[Throwable](err)(_.getCause)
-      .takeWhile(_ != null).map(String.valueOf).mkString(" <- ")
-    assert(chain.contains(blocked), s"not $blocked's error: $chain")
-    FieldCatalog.Groups.all.filterNot(_ == blocked).foreach { table =>
-      assert(new java.io.File(s"$base/$table/batch=8/_SUCCESS").isFile,
-        s"$table's writer had not finished when the batch failed")
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "fan-out spec")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(token, "drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (jobs.get, execs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("one-job writer: parquet and csv layouts match DataFrameWriter's") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    def footer(f: java.io.File) = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toURI), conf))
+      try r.getFooter finally r.close()
     }
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore)
-      .isEmpty, "the failed batch left its cache behind")
-    // the cause removed, replaying batch 8 converges to the nine tables
-    assert(blocker.delete())
-    FanOutSink.writeBatch(conformed, base, batchId = Some(8L))
-    FieldCatalog.Groups.all.foreach { table =>
-      val back = FanOutSink.readTable(spark, base, table)
-      assert(back.count() == 2, s"$table did not converge on replay")
+    val conformed = synthetic()
+    // The former per-table writes, over one materialized deduped batch.
+    val deduped = Transforms
+      .dedupByKey(conformed.repartition(col(FieldCatalog.keySensor)),
+        Transforms.stableDedupOrder(conformed))
+      .withColumn("date", to_date(col(FieldCatalog.keyTimestamp)))
+      .sortWithinPartitions(col(FieldCatalog.keyTimestamp))
+      .persist()
+    try Seq("parquet", "csv").foreach { format =>
+      val base = Files.createTempDirectory(s"graft_sink_$format").toString
+      val ref = Files.createTempDirectory(s"graft_ref_$format").toString
+      FanOutSink.writeBatch(conformed, base, format = format,
+        batchId = Some(3L))
+      FieldCatalog.Groups.all.foreach { table =>
+        val cols = FieldCatalog.keyCols ++ FieldCatalog.groupCols(table)
+        val w = deduped.select((cols :+ "date").map(col): _*).write
+          .partitionBy("date")
+          .option("compression", if (format == "parquet") "zstd" else "none")
+        if (format == "parquet") w.parquet(s"$ref/$table")
+        else w.option("header", "true").csv(s"$ref/$table")
+        val mine = new java.io.File(s"$base/$table/batch=3")
+        val theirs = new java.io.File(s"$ref/$table")
+        def dates(d: java.io.File) = d.listFiles().map(_.getName)
+          .filter(_.startsWith("date=")).sorted.toSeq
+        assert(dates(mine) == dates(theirs) && dates(mine).size == 2, table)
+        dates(mine).foreach { d =>
+          val a = visibleFiles(new java.io.File(mine, d))
+          val b = visibleFiles(new java.io.File(theirs, d))
+          assert(a.size == b.size, s"$table/$d file count")
+          assert(a.forall(_.getName.startsWith("part-")), s"$table/$d names")
+          assert(a.map(_.getName.dropWhile(_ != '.')).toSet ==
+            b.map(_.getName.dropWhile(_ != '.')).toSet, s"$table/$d codec")
+          if (format == "parquet") {
+            val (fa, fb) = (footer(a.head), footer(b.head))
+            assert(fa.getFileMetaData.getSchema == fb.getFileMetaData.getSchema)
+            assert(fa.getFileMetaData.getKeyValueMetaData ==
+              fb.getFileMetaData.getKeyValueMetaData, s"$table/$d metadata")
+            assert(fa.getBlocks.get(0).getColumns.get(0).getCodec.name ==
+              "ZSTD")
+            assert(rows(spark.read.parquet(mine.getPath + "/" + d)) ==
+              rows(spark.read.parquet(theirs.getPath + "/" + d)), s"$table/$d")
+          } else {
+            def header(f: java.io.File) = {
+              val src = scala.io.Source.fromFile(f)
+              try src.getLines().next() finally src.close()
+            }
+            assert(a.map(header).toSet == Set(cols.mkString(",")), table)
+            assert(b.map(header).toSet == Set(cols.mkString(",")), table)
+            def text(fs: Seq[java.io.File]) = fs.flatMap { f =>
+              val src = scala.io.Source.fromFile(f)
+              try src.getLines().drop(1).toList finally src.close()
+            }.sorted
+            assert(text(a) == text(b), s"$table/$d")
+          }
+        }
+      }
+      // staging is gone once the batch commits
+      assert(!new java.io.File(s"$base/.fanout-staging/batch=3").exists())
+    } finally deduped.unpersist()
+  }
+
+  test("replaying a batchId is idempotent (synthetic rows)") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_sink_rp").toString
+    FanOutSink.writeBatch(synthetic(), base, batchId = Some(5L))
+    val first = FieldCatalog.Groups.all.map(t =>
+      rows(FanOutSink.readTable(spark, base, t)))
+    FanOutSink.writeBatch(synthetic(), base, batchId = Some(5L))
+    FieldCatalog.Groups.all.zip(first).foreach { case (t, before) =>
+      val back = FanOutSink.readTable(spark, base, t)
+      assert(rows(back) == before, s"$t changed on replay")
       assert(back.select("sensor_index").as[Int].collect().sorted.toSeq ==
-        Seq(7, 8), table)
+        Seq(7, 8, 9), t)
+    }
+    // an empty micro-batch lands an empty run
+    FanOutSink.writeBatch(synthetic().limit(0), base, batchId = Some(6L))
+    FieldCatalog.Groups.all.foreach { t =>
+      assert(new java.io.File(s"$base/$t/batch=6").isDirectory, t)
+      assert(rows(FanOutSink.readTable(spark, base, t)) == rows(
+        FanOutSink.readTable(spark, base, t).where("sensor_index < 10")), t)
     }
   }
 
-  test("fan-out dedup and layout share one exchange") {
+  test("a failed table commit fails the batch; a replay converges") {
     import spark.implicits._
+    // The job writes all nine tables; a table that cannot be put in
+    // place — here a plain file sits where its directory goes — fails
+    // the micro-batch with that table named, and leaves no staged files.
+    val conformed = synthetic()
+    Seq(FieldCatalog.Groups.all.head, FieldCatalog.Groups.all.last)
+      .foreach { blocked =>
+        val base = Files.createTempDirectory("graft_sink_f").toString
+        val blocker = new java.io.File(s"$base/$blocked")
+        assert(blocker.createNewFile())
+        val err = intercept[Exception] {
+          FanOutSink.writeBatch(conformed, base, batchId = Some(8L))
+        }
+        val chain = Iterator.iterate[Throwable](err)(_.getCause)
+          .takeWhile(_ != null).map(String.valueOf).mkString(" <- ")
+        assert(chain.contains(s"fan-out table $blocked"),
+          s"not $blocked's error: $chain")
+        assert(visibleFiles(new java.io.File(base)).forall(
+          f => !f.getPath.contains("staging")))
+        assert(!new java.io.File(s"$base/.fanout-staging/batch=8").exists(),
+          "the failed batch left its staging directory")
+        // the cause removed, replaying batch 8 converges to the nine tables
+        assert(blocker.delete())
+        FanOutSink.writeBatch(conformed, base, batchId = Some(8L))
+        FieldCatalog.Groups.all.foreach { table =>
+          val back = FanOutSink.readTable(spark, base, table)
+          assert(back.select("sensor_index").as[Int].collect().sorted.toSeq ==
+            Seq(7, 8, 9), s"$table did not converge on replay")
+        }
+      }
+  }
+
+  test("fan-out dedup and layout share one exchange") {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     object Plans extends AdaptiveSparkPlanHelper {
-      // the table writes read the batch's cache: count inside it too
-      def shuffles(p: SparkPlan): Int = collect(p) {
-        case _: ShuffleExchangeExec => 1
-        case m: InMemoryTableScanExec => shuffles(m.relation.cachedPlan)
-      }.sum
+      def shuffles(p: SparkPlan): Int =
+        collect(p) { case _: ShuffleExchangeExec => 1 }.sum
     }
     val base = Files.createTempDirectory("graft_sink_x").toString
-    val conformed = Transforms.conform(Seq(
-      (1700000000L, 7L, "a"), (1700000000L, 7L, "b"), (1700003600L, 8L, "c"))
-      .toDF("data_time_stamp", "sensor_index", "name"))
-    val tables = FieldCatalog.Groups.all.size
-    val counts = finishedExecutions {
-      case (_, qe) if qe.toString.contains(base) =>
-        Plans.shuffles(qe.executedPlan)
-    }(_.size >= tables) {
-      FanOutSink.writeBatch(conformed, base, batchId = Some(0L))
+    val conformed = synthetic()
+    var counts = Seq.empty[Int]
+    val (jobs, executions) = jobsAndExecutions("fan-out-one-job") {
+      counts = finishedExecutions {
+        case (_, qe) if qe.toString.contains(base) =>
+          Plans.shuffles(qe.executedPlan)
+      }(_.nonEmpty) {
+        FanOutSink.writeBatch(conformed, base, batchId = Some(0L))
+      }
     }
-    assert(counts.size == tables && counts.forall(_ == 1),
-      s"shuffles per table write: $counts")
+    assert(executions == 1, s"$executions SQL executions for one batch")
+    assert(counts == Seq(1), s"shuffles in the batch's execution: $counts")
+    assert(jobs >= 1 && jobs <= 2, s"$jobs jobs for one batch")
+  }
+
+  test("save modes apply per table as DataFrameWriter's do") {
+    val base = Files.createTempDirectory("graft_sink_m").toString
+    def counts() = FieldCatalog.Groups.all.map(t =>
+      FanOutSink.readTable(spark, base, t).count())
+    val nine = FieldCatalog.Groups.all.size
+    FanOutSink.writeBatch(synthetic(), base)
+    assert(counts() == Seq.fill(nine)(3L))
+    FanOutSink.writeBatch(synthetic(), base, mode = SaveMode.Append)
+    assert(counts() == Seq.fill(nine)(6L))
+    FanOutSink.writeBatch(synthetic(), base, mode = SaveMode.Overwrite)
+    assert(counts() == Seq.fill(nine)(3L))
+    val err = intercept[Exception] {
+      FanOutSink.writeBatch(synthetic(), base, mode = SaveMode.ErrorIfExists)
+    }
+    assert(err.getMessage.contains("already exists"), err.getMessage)
+    assert(counts() == Seq.fill(nine)(3L))
+    // Ignore skips the tables that exist and writes the one that does not
+    val gone = FieldCatalog.Groups.Station
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$base/$gone"))
+    FanOutSink.writeBatch(synthetic(1), base, mode = SaveMode.Ignore)
+    FieldCatalog.Groups.all.foreach { t =>
+      val sensors = FanOutSink.readTable(spark, base, t)
+        .select("sensor_index").collect().map(_.getInt(0)).sorted.toSeq
+      assert(sensors == (if (t == gone) Seq(8, 9, 10) else Seq(7, 8, 9)), t)
+    }
+  }
+
+  test("readTable runs no job and reads what footer inference reads") {
+    val base = Files.createTempDirectory("graft_sink_rt").toString
+    val flat = Files.createTempDirectory("graft_sink_rt_flat").toString
+    val table = FieldCatalog.Groups.Environmental
+    def same(dir: String, layout: String): Unit = {
+      var read: org.apache.spark.sql.DataFrame = null
+      val (jobs, _) = jobsAndExecutions("fan-out-read") {
+        read = FanOutSink.readTable(spark, dir, table)
+      }
+      assert(jobs == 0, s"$layout: readTable ran $jobs jobs")
+      val inferred = spark.read.parquet(s"$dir/$table").drop("batch")
+      assert(read.schema == inferred.schema, s"$layout schema")
+      assert(rows(read) == rows(inferred) && rows(read).nonEmpty, layout)
+    }
+    FanOutSink.writeBatch(synthetic(), base, batchId = Some(1L))
+    FanOutSink.writeBatch(synthetic(10), base, batchId = Some(2L))
+    same(base, "uncompacted")
+    assert(FanOutSink.compact(spark, base, table) == 2)
+    same(base, "compacted")
+    FanOutSink.writeBatch(synthetic(20), base, batchId = Some(4L))
+    same(base, "mixed")
+    FanOutSink.writeBatch(synthetic(), flat)
+    same(flat, "without batchId")
+  }
+
+  test("compact keeps its sources when the rename into place fails") {
+    val base = Files.createTempDirectory("graft_sink_cf").toString
+    val table = FieldCatalog.Groups.Station
+    FanOutSink.writeBatch(synthetic(), base, batchId = Some(1L))
+    FanOutSink.writeBatch(synthetic(10), base, batchId = Some(2L))
+    val before = rows(FanOutSink.readTable(spark, base, table))
+    // a filesystem whose rename into the new run answers false
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.norename.impl", classOf[RunRenameRefusingFs].getName)
+    try {
+      val refused = intercept[java.io.IOException] {
+        FanOutSink.compact(spark, s"norename://$base", table)
+      }
+      assert(refused.getMessage.contains(table) &&
+        refused.getMessage.contains("batch=c1x3"), refused.getMessage)
+    } finally conf.unset("fs.norename.impl")
+    assert(new java.io.File(s"$base/$table/.compacting").isDirectory)
+    assert(rows(FanOutSink.readTable(spark, base, table)) == before)
+    // the run the merge of batches 1 and 2 would become, taken by a file
+    val blocker = new java.io.File(s"$base/$table/batch=c1x3")
+    assert(blocker.createNewFile())
+    val err = intercept[java.io.IOException] {
+      FanOutSink.compact(spark, base, table)
+    }
+    assert(err.getMessage.contains(table) &&
+      err.getMessage.contains("batch=c1x3"), err.getMessage)
+    assert(new java.io.File(s"$base/$table/batch=1").isDirectory)
+    assert(new java.io.File(s"$base/$table/batch=2").isDirectory)
+    assert(blocker.delete())
+    assert(rows(FanOutSink.readTable(spark, base, table)) == before)
+    // the next run cleans the kept staging dir and folds as usual
+    assert(FanOutSink.compact(spark, base, table) == 2)
+    assert(rows(FanOutSink.readTable(spark, base, table)) == before)
   }
 
   test("PK dedup survivor is stable across partition layouts") {
@@ -821,6 +1051,15 @@ class FanOutSinkSpec extends SparkSpec {
       FieldCatalog.Groups.Station)
     assert(station.count() == 3, "restart must not duplicate committed data")
   }
+}
+
+/** The local filesystem under the `norename:` scheme, whose rename into a
+  * compacted run (`batch=c...`) fails by returning false. */
+class RunRenameRefusingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("norename:///")
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    !dst.getName.startsWith("batch=c") && super.rename(src, dst)
 }
 
 class IndexMaintenanceStreamSpec extends SparkSpec {
