@@ -104,12 +104,18 @@ trait SensorFetcher extends Serializable {
 }
 
 /** Replays `*.json` payload files from a directory, one file per cursor
-  * step, in sorted order — the test/backfill transport. */
+  * step, in sorted order — the test/backfill transport. A missing or
+  * non-directory `replay.dir` fails [[validate]], naming the path. */
 class FileReplayFetcher extends SensorFetcher {
   private def files(options: Map[String, String]) = {
     val dir = new java.io.File(options.getOrElse("replay.dir",
       sys.error("replay.dir option required for FileReplayFetcher")))
-    dir.listFiles((_, n) => n.endsWith(".json")).sortBy(_.getName)
+    val listed = dir.listFiles((_, n) => n.endsWith(".json"))
+    require(listed != null, s"replay.dir $dir is missing or not a directory")
+    listed.sortBy(_.getName)
+  }
+  override def validate(options: Map[String, String]): Unit = {
+    val _ = files(options)
   }
   override def latestCursor(current: Long, options: Map[String, String]): Long =
     files(options).length.toLong
@@ -281,7 +287,9 @@ class PollingMicroBatchStream(props: util.Map[String, String])
     s"minPollIntervalSeconds must be >= 60 (got $minInterval) — the reference " +
       "rejects faster polling (PurpleAirDataLogger.py:52-65)")
 
-  @transient private lazy val fetcher: SensorFetcher = {
+  // Validated when the stream is created, so a bad option fails the query
+  // before its first trigger.
+  @transient private val fetcher: SensorFetcher = {
     val f = Class.forName(fetcherClass).getDeclaredConstructor()
       .newInstance().asInstanceOf[SensorFetcher]
     f.validate(options)

@@ -56,6 +56,7 @@ class CliSpec extends SparkSpec {
 
   test("streaming e2e: poll → conform → 9-way fan-out → hourly aggregate " +
       "→ retention, one CLI invocation (S5/A2/T5/K3)") {
+    Payloads.assumeReferenceSamples()
     val outDir = tmp("cli_out")
     val cpDir = tmp("cli_cp")
     val aggDir = s"${tmp("cli_agg")}/agg"
@@ -69,7 +70,7 @@ class CliSpec extends SparkSpec {
     val c = DataLoggerCli.parseArgs(Array(
       "-paa_single_sensor_request_json_file", s"$cfgDir/req.json",
       "-fetcher_class", classOf[graft.sources.FileReplayFetcher].getName,
-      "-replay_dir", "/root/reference/hardware_variant_json_samples",
+      "-replay_dir", Payloads.ReferenceSamples,
       "-out_dir", outDir, "-checkpoint_dir", s"$cpDir/cp",
       "-sink", "parquet", "-poll_seconds", "65",
       "-hourly_aggregate_dir", aggDir, "-retention_hours", "8"))

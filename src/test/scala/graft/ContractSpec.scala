@@ -17,9 +17,8 @@ class ContractSpec extends SparkSpec {
   }
 
   test("CSV sink headers match the reference's column order exactly") {
-    val payload = spark.read.option("multiLine", true).json(
-      "/root/reference/hardware_variant_json_samples/" +
-        "3.0+OPENLOG+31037 MB+DS3231+BME280+BME680+PMSX003-A+PMSX003-B.json")
+    val payload = spark.read.option("multiLine", true)
+      .json(Payloads.dualChannelFullEnv)
     val base = java.nio.file.Files.createTempDirectory("graft_csvh").toString
     FanOutSink.writeBatch(
       Transforms.conform(Transforms.flattenSingle(payload)), base, format = "csv")

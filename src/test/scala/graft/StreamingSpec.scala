@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.model.ApiPayloadSchema
 import graft.schema.FieldCatalog
@@ -16,14 +16,13 @@ import graft.transform.Transforms
 
 class PollingSourceSpec extends SparkSpec {
 
-  private val samplesDir = "/root/reference/hardware_variant_json_samples"
-
   test("replay source streams payload files through flatten→conform") {
+    Payloads.assumeReferenceSamples()
     val out = Files.createTempDirectory("graft_poll").toFile
     val wire = spark.readStream.format(PollingSource.format)
       .option(PollingSource.Options.FetcherClass,
         classOf[graft.sources.FileReplayFetcher].getName)
-      .option("replay.dir", samplesDir)
+      .option("replay.dir", Payloads.ReferenceSamples)
       .option(PollingSource.Options.AllowFastPolling, "true")
       .load()
     val q = wire.writeStream.format("memory").queryName("wire_out")
@@ -41,6 +40,34 @@ class PollingSourceSpec extends SparkSpec {
         .map(_.getInt(0)).sorted.toSeq
       assert(idx == Seq(53, 14867, 147883))
     } finally q.stop()
+  }
+
+  test("replay source refuses a missing or non-directory replay.dir by path") {
+    val tmp = Files.createTempDirectory("graft_noreplay").toFile
+    val notADir = new java.io.File(tmp, "payload.json")
+    Files.writeString(notADir.toPath, "{}")
+    Seq(new java.io.File(tmp, "absent"), notADir).foreach { dir =>
+      val wire = spark.readStream.format(PollingSource.format)
+        .option(PollingSource.Options.FetcherClass,
+          classOf[graft.sources.FileReplayFetcher].getName)
+        .option("replay.dir", dir.toString)
+        .option(PollingSource.Options.AllowFastPolling, "true")
+        .load()
+      val q = wire.writeStream.format("noop")
+        .option("checkpointLocation", s"$tmp/cp_${dir.getName}")
+        .start()
+      val e = try intercept[StreamingQueryException](q.processAllAvailable())
+        finally q.stop()
+      assert(e.getCause.isInstanceOf[IllegalArgumentException], e)
+      assert(e.getMessage.contains(
+        s"replay.dir $dir is missing or not a directory"), e.getMessage)
+    }
+    // the batch path validates through the same fetcher
+    val e = intercept[IllegalArgumentException] {
+      new graft.sources.FileReplayFetcher()
+        .validate(Map("replay.dir" -> s"$tmp/absent"))
+    }
+    assert(e.getMessage.contains(s"$tmp/absent"))
   }
 
   test("multi-sensor columnar payload streams through zip→conform") {
@@ -82,7 +109,7 @@ class PollingSourceSpec extends SparkSpec {
       spark.readStream.format(PollingSource.format)
         .option(PollingSource.Options.FetcherClass,
           classOf[graft.sources.FileReplayFetcher].getName)
-        .option("replay.dir", samplesDir)
+        .option("replay.dir", Payloads.fixtureDir)
         .option(PollingSource.Options.MinPollIntervalSeconds, "30")
         .load()
         .writeStream.format("memory").queryName("too_fast")
@@ -460,9 +487,8 @@ class ContinuousAggregateSpec extends SparkSpec {
 class FanOutSinkSpec extends SparkSpec {
 
   test("batch fan-out: 9 tables, date-partitioned, PK-deduped") {
-    val payload = spark.read.option("multiLine", true).json(
-      "/root/reference/hardware_variant_json_samples/" +
-        "3.0+OPENLOG+31037 MB+DS3231+BME280+BME680+PMSX003-A+PMSX003-B.json")
+    val payload = spark.read.option("multiLine", true)
+      .json(Payloads.dualChannelFullEnv)
     val conformed = Transforms.conform(Transforms.flattenSingle(payload))
     val doubled = conformed.union(conformed) // duplicate PK rows
     val base = Files.createTempDirectory("graft_sink").toString
@@ -480,9 +506,8 @@ class FanOutSinkSpec extends SparkSpec {
   }
 
   test("replaying a micro-batch with the same batchId is idempotent") {
-    val payload = spark.read.option("multiLine", true).json(
-      "/root/reference/hardware_variant_json_samples/" +
-        "3.0+OPENLOG+31037 MB+DS3231+BME280+BME680+PMSX003-A+PMSX003-B.json")
+    val payload = spark.read.option("multiLine", true)
+      .json(Payloads.dualChannelFullEnv)
     val conformed = Transforms.conform(Transforms.flattenSingle(payload))
     val base = Files.createTempDirectory("graft_sink_r").toString
     FanOutSink.writeBatch(conformed, base, batchId = Some(7L))
@@ -811,7 +836,7 @@ class FanOutSinkSpec extends SparkSpec {
     val wire = spark.readStream.format(PollingSource.format)
       .option(PollingSource.Options.FetcherClass,
         classOf[graft.sources.FileReplayFetcher].getName)
-      .option("replay.dir", "/root/reference/hardware_variant_json_samples")
+      .option("replay.dir", Payloads.fixtureDir)
       .option(PollingSource.Options.AllowFastPolling, "true")
       .load()
     val conformed = Transforms.conform(
@@ -828,9 +853,8 @@ class FanOutSinkSpec extends SparkSpec {
   }
 
   test("compact folds batch directories into one, preserving data + layout") {
-    val payload = spark.read.option("multiLine", true).json(
-      "/root/reference/hardware_variant_json_samples/" +
-        "3.0+OPENLOG+31037 MB+DS3231+BME280+BME680+PMSX003-A+PMSX003-B.json")
+    val payload = spark.read.option("multiLine", true)
+      .json(Payloads.dualChannelFullEnv)
     val conformed = Transforms.conform(Transforms.flattenSingle(payload))
     val base = Files.createTempDirectory("graft_sink_c").toString
     FanOutSink.writeBatch(conformed, base, batchId = Some(1L))
@@ -853,9 +877,8 @@ class FanOutSinkSpec extends SparkSpec {
   }
 
   test("leveled compaction: per-row rewrite count is O(levels), not O(batches)") {
-    val payload = spark.read.option("multiLine", true).json(
-      "/root/reference/hardware_variant_json_samples/" +
-        "3.0+OPENLOG+31037 MB+DS3231+BME280+BME680+PMSX003-A+PMSX003-B.json")
+    val payload = spark.read.option("multiLine", true)
+      .json(Payloads.dualChannelFullEnv)
     val conformed = Transforms.conform(Transforms.flattenSingle(payload))
     val base = Files.createTempDirectory("graft_sink_lvl").toString
     val table = FieldCatalog.Groups.Station
@@ -914,7 +937,7 @@ class FanOutSinkSpec extends SparkSpec {
     val wire = spark.readStream.format(PollingSource.format)
       .option(PollingSource.Options.FetcherClass,
         classOf[graft.sources.FileReplayFetcher].getName)
-      .option("replay.dir", "/root/reference/hardware_variant_json_samples")
+      .option("replay.dir", Payloads.fixtureDir)
       .option(PollingSource.Options.AllowFastPolling, "true")
       .load()
     val conformed = Transforms.conform(
@@ -932,9 +955,8 @@ class FanOutSinkSpec extends SparkSpec {
     }
     // Replay of a committed micro-batch: every table marker for batch 0
     // exists, so re-running the batch appends nothing.
-    val payload = spark.read.option("multiLine", true).json(
-      "/root/reference/hardware_variant_json_samples/" +
-        "3.0+OPENLOG+31037 MB+DS3231+BME280+BME680+PMSX003-A+PMSX003-B.json")
+    val payload = spark.read.option("multiLine", true)
+      .json(Payloads.dualChannelFullEnv)
     val replayBatch = Transforms.conform(Transforms.flattenSingle(payload))
     val markerDir = new org.apache.hadoop.fs.Path(
       s"$cp/_graft_jdbc_committed/0")
@@ -970,9 +992,8 @@ class FanOutSinkSpec extends SparkSpec {
     val url = s"jdbc:derby:$dbRoot/db;create=true"
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-    val payload = spark.read.option("multiLine", true).json(
-      "/root/reference/hardware_variant_json_samples/" +
-        "3.0+OPENLOG+31037 MB+DS3231+BME280+BME680+PMSX003-A+PMSX003-B.json")
+    val payload = spark.read.option("multiLine", true)
+      .json(Payloads.dualChannelFullEnv)
     val conformed = Transforms.conform(Transforms.flattenSingle(payload))
     FanOutSink.writeBatchJdbc(conformed, url, props, epochTextCompat = true)
     val station = spark.read.jdbc(url, FieldCatalog.Groups.Station, props)
@@ -1007,9 +1028,8 @@ class FanOutSinkSpec extends SparkSpec {
 
   test("readCsvTable: catalog-typed read over the reference CSV layout") {
     val base = Files.createTempDirectory("graft_csv_rt").toString
-    val payload = spark.read.option("multiLine", true).json(
-      "/root/reference/hardware_variant_json_samples/" +
-        "3.0+OPENLOG+31037 MB+DS3231+BME280+BME680+PMSX003-A+PMSX003-B.json")
+    val payload = spark.read.option("multiLine", true)
+      .json(Payloads.dualChannelFullEnv)
     val conformed = Transforms.conform(Transforms.flattenSingle(payload))
     FanOutSink.writeBatch(conformed, base, format = "csv")
     val env = FieldCatalog.Groups.Environmental
@@ -1036,7 +1056,7 @@ class FanOutSinkSpec extends SparkSpec {
       val wire = spark.readStream.format(PollingSource.format)
         .option(PollingSource.Options.FetcherClass,
           classOf[graft.sources.FileReplayFetcher].getName)
-        .option("replay.dir", "/root/reference/hardware_variant_json_samples")
+        .option("replay.dir", Payloads.fixtureDir)
         .option(PollingSource.Options.AllowFastPolling, "true")
         .load()
       val conformed = Transforms.conform(

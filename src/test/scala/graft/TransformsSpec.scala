@@ -7,21 +7,25 @@ import org.apache.spark.sql.types._
 import graft.schema.FieldCatalog
 import graft.transform.Transforms
 
-/** The correctness core: flatten → conform → split → recombine against the
-  * reference's three real hardware payloads
-  * (`/root/reference/hardware_variant_json_samples/`). */
+/** The correctness core: flatten → conform → split → recombine over the
+  * single-channel and full-env dual-channel hardware variants. Shape checks
+  * read the committed synthetic payloads; checks on the real readings'
+  * values read the reference samples (see [[Payloads]]). */
 class TransformsSpec extends SparkSpec {
 
-  private val samplesDir = "/root/reference/hardware_variant_json_samples"
-  private def sample(name: String): DataFrame =
-    spark.read.option("multiLine", true).json(s"$samplesDir/$name")
+  private def read(path: String): DataFrame =
+    spark.read.option("multiLine", true).json(path)
 
-  private lazy val dual = sample(
+  private lazy val dual = read(Payloads.dualChannelFullEnv)
+  private lazy val single = read(Payloads.singleChannel)
+  private lazy val realDual = read(s"${Payloads.ReferenceSamples}/" +
     "3.0+OPENLOG+31037 MB+DS3231+BME280+BME680+PMSX003-A+PMSX003-B.json")
-  private lazy val single = sample("1.0+1M+PMSX003-O.json")
+  private lazy val realSingle =
+    read(s"${Payloads.ReferenceSamples}/1.0+1M+PMSX003-O.json")
 
   test("flattenSingle: stats structs flatten with the reference's naming") {
-    val flat = Transforms.flattenSingle(dual)
+    Payloads.assumeReferenceSamples()
+    val flat = Transforms.flattenSingle(realDual)
     val row = flat.select(col("data_time_stamp"), col("sensor_index"),
       col("`pm2.5`"), col("`stats_pm2.5`"), col("`pm2.5_10minute`"),
       col("`pm2.5_10minute_a`"), col("`pm2.5_10minute_b`"),
@@ -35,7 +39,8 @@ class TransformsSpec extends SparkSpec {
   }
 
   test("flattenSingle: single-channel hardware (no stats_b, no env) still flattens") {
-    val flat = Transforms.flattenSingle(single)
+    Payloads.assumeReferenceSamples()
+    val flat = Transforms.flattenSingle(realSingle)
     assert(!flat.columns.contains("pm2.5_10minute_b"))
     assert(!flat.columns.contains("humidity"))
     assert(flat.select("sensor_index").head().getLong(0) == 53L)
@@ -62,7 +67,8 @@ class TransformsSpec extends SparkSpec {
   }
 
   test("conform: epoch fields become UTC timestamps") {
-    val conformed = Transforms.conform(Transforms.flattenSingle(dual))
+    Payloads.assumeReferenceSamples()
+    val conformed = Transforms.conform(Transforms.flattenSingle(realDual))
     val r = conformed.select("data_time_stamp", "last_seen").head()
     assert(r.getTimestamp(0).toInstant.getEpochSecond == 1658811226L)
     assert(!r.isNullAt(1))
