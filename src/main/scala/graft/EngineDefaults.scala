@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Engine-wide session defaults shared by every driver-facing main
-  * (Bench / Probe / Verify / Stages / rehearsal mains, the logger and
+  * (Bench / Verify / Stages / PlanDump / rehearsal mains, the logger and
   * dashboard CLIs).
   *
   * Round-13 optimization findings (OPTIMIZATION_r13.md, measured on the

@@ -81,7 +81,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction(GraftFunctions.simhash60Descriptor)
     e.injectFunction(GraftFunctions.minhashDescriptor)
     e.injectFunction(GraftFunctions.wordShinglesDescriptor)
-    e.injectFunction(GraftFunctions.pairCombinationsDescriptor)
+    e.injectFunction(GraftFunctions.pairCombinationsStructDescriptor)
     VectorFunctions.descriptors.foreach(e.injectFunction)
     FixedLogFunctions.descriptors.foreach(e.injectFunction)
   }
@@ -105,10 +105,11 @@ object GraftFunctions {
     new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
     (children: Seq[Expression]) => WordShingles(children(0), children(1)))
 
-  private[graft] val pairCombinationsDescriptor = (
-    FunctionIdentifier("pair_combinations"),
-    new ExpressionInfo(classOf[PairCombinations].getName, "pair_combinations"),
-    (children: Seq[Expression]) => PairCombinations(children.head))
+  private[graft] val pairCombinationsStructDescriptor = (
+    FunctionIdentifier("pair_combinations_struct"),
+    new ExpressionInfo(classOf[PairCombinationsStruct].getName,
+      "pair_combinations_struct"),
+    (children: Seq[Expression]) => PairCombinationsStruct(children.head))
 
   def register(spark: SparkSession): Unit = {
     // Idempotent per session: every operator entry point calls this, so

@@ -238,44 +238,85 @@ object Dedup {
     }
   }
 
-  /** Distinct candidate pairs (`id_a < id_b`) from LSH buckets WITHOUT a
-    * self-join: group ids per bucket, explode in-bucket pairs. A self-join
-    * would recompute the whole signature pipeline for each side (exchange
-    * reuse does not rescue aliased branches); this computes signatures
-    * once and shuffles only (bucket, id). `maxBucket` drops degenerate
-    * buckets (a hot bucket is quadratic however you generate pairs —
-    * standard LSH practice is to skip, not explode, them; at 2000 ids a
-    * bucket already means ~2M pairs in one task) — via [[dropHotBuckets]],
-    * so an over-full bucket never reaches the aggregation buffer either.
-    * The pair set is materialized eagerly (`localCheckpoint`) so the
-    * bucket projection's cache can be released before returning.
+  /** In-bucket candidate pairs WITHOUT a self-join — the one pair
+    * generator behind every bucket/postings operator: group `rows` by
+    * `bucketCols`, gather each bucket's `entryCols` as a sorted struct
+    * array, and explode its C(n,2) pairs through the native
+    * `pair_combinations_struct` kernel. The first entry column is the
+    * id, so every pair has `id_a <= id_b`, strictly `<` when a bucket
+    * holds each id once. Returns `carry` (a subset of `bucketCols`)
+    * followed by each entry field `f` as `f_a`, `f_b`, one row per
+    * in-bucket pair — not deduplicated across buckets.
     *
-    * Ids must be numeric (castable to LONG): the `pair_combinations`
-    * kernel works on long arrays. Validated up front — a string id would
-    * otherwise surface as a null/ANSI cast error deep inside the kernel
+    * Buckets are materialized whole in one aggregation buffer, so any
+    * hot-bucket bound ([[dropHotBuckets]]) and any width pin ([[Par]])
+    * belong upstream, on `rows`. */
+  private[graft] def bucketPairs(rows: DataFrame, bucketCols: Seq[String],
+      entryCols: Seq[String], carry: Seq[String] = Nil): DataFrame = {
+    require(carry.forall(bucketCols.contains),
+      s"bucketPairs carries only bucket columns; got ${carry.mkString(",")}")
+    graft.functions.GraftFunctions.register(rows.sparkSession)
+    rows.groupBy(bucketCols.map(col): _*)
+      .agg(array_sort(collect_list(struct(entryCols.map(col): _*))).as("es"))
+      .filter(size(col("es")) > 1)
+      .select(carry.map(col) :+ explode(graft.functions.PairFunctions
+        .pairCombinationsStruct(col("es"))).as("p"): _*)
+      .select(carry.map(col) ++ entryCols.flatMap(f => Seq(
+        col(s"p.a.$f").as(s"${f}_a"), col(s"p.b.$f").as(s"${f}_b"))): _*)
+  }
+
+  /** Distinct candidate pairs (`id_a < id_b`) from LSH buckets via
+    * [[bucketPairs]]. A self-join would recompute the whole signature
+    * pipeline for each side (exchange reuse does not rescue aliased
+    * branches); this computes signatures once and shuffles only
+    * (bucket, id[, payload]). `maxBucket` drops degenerate buckets (a hot
+    * bucket is quadratic however you generate pairs — standard LSH
+    * practice is to skip, not explode, them; at 2000 ids a bucket already
+    * means ~2M pairs in one task) — via [[dropHotBuckets]], so an
+    * over-full bucket never reaches the aggregation buffer either. The
+    * pair set is materialized eagerly (`localCheckpoint`) so the bucket
+    * projection's cache can be released before returning.
+    *
+    * `keyCol` (one of `bucketCols`) is kept on the output — the sweep
+    * form: several banding configurations share ONE bucket shuffle and
+    * each config's pair set stays separable. `payloadCol` carries one
+    * small column per id through the bucket aggregation, so verification
+    * needs NO join back onto the signature table (a join-back re-executes
+    * the signature pipeline per side, or forces a persist) — only worth
+    * it for scalar payloads; wide payloads (vectors, long signatures) are
+    * cheaper to join back from a persisted side. Output
+    * `([keyCol,] id_a, id_b[, <payload>_a, <payload>_b])`, distinct.
+    *
+    * Ids must be numeric: they are cast to LONG so every caller's pair
+    * frame joins on one id type. Validated up front — a string id would
+    * otherwise surface as a null/ANSI cast error deep inside the pair
     * stage. */
   private[operators] def pairsFromBuckets(
       banded: DataFrame, idCol: String, bucketCols: Seq[String],
-      maxBucket: Int = 2000): DataFrame = {
-    graft.functions.GraftFunctions.register(banded.sparkSession)
+      maxBucket: Int = 2000, keyCol: Option[String] = None,
+      payloadCol: Option[String] = None): DataFrame = {
     val idType = banded.schema(idCol).dataType
     require(idType.isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"pairsFromBuckets requires a numeric id column (castable to LONG); " +
         s"'$idCol' is ${idType.simpleString}")
-    val rows = banded.select((bucketCols :+ idCol).map(col): _*)
+    val rows = banded.select((bucketCols ++ (idCol +: payloadCol.toSeq))
+        .map(col): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val ids = array_sort(collect_list(col(idCol).cast(LongType)))
-      // pinned width for the in-bucket pair explode (the [[Par]] rule)
-      dropHotBuckets(rows, bucketCols, maxBucket.toLong)
-        .transform(Par.byKey(_, bucketCols.map(col): _*))
-        .groupBy(bucketCols.map(col): _*)
-        .agg(ids.as("ids"))
-        .filter(size(col("ids")) > 1)
-        .select(explode(
-          graft.functions.PairFunctions.pairCombinations(col("ids"))).as("p"))
-        .select(col("p.id_a"), col("p.id_b"))
-        .distinct()
+      val kept = dropHotBuckets(rows, bucketCols, maxBucket.toLong)
+      // pinned width for the in-bucket pair explode (byte-sparse,
+      // compute-dense — the [[Par]] rule; collect_list has no map-side
+      // reduction so the moved exchange is byte-neutral). The payload
+      // form stays at AQE's byte-driven width: pinning it is a plan
+      // change no measurement has priced yet.
+      val pinned =
+        if (payloadCol.isEmpty) Par.byKey(kept, bucketCols.map(col): _*)
+        else kept
+      bucketPairs(
+        pinned.select(bucketCols.map(col) ++ (col(idCol).cast(LongType)
+          .as("id") +: payloadCol.toSeq.map(col)): _*),
+        bucketCols, "id" +: payloadCol.toSeq, keyCol.toSeq)
+        .distinct() // a payload is functionally dependent on its id
         .localCheckpoint(true)
     } finally rows.unpersist()
   }
@@ -435,42 +476,6 @@ object Dedup {
         col("n_hit").cast(DoubleType) / col("n_truth")))
   }
 
-  /** Distinct candidate pairs like [[pairsFromBuckets]], but retaining
-    * one GROUPING column (`keyCol`, itself part of `bucketCols`) on the
-    * output — the sweep form: several banding configurations share ONE
-    * bucket shuffle, and each config's pair set stays separable. Output
-    * `(keyCol, id_a, id_b)`, distinct per key, eagerly checkpointed
-    * (the bucket projection's cache is released before returning). */
-  private[operators] def pairsFromBucketsKeyed(
-      banded: DataFrame, idCol: String, keyCol: String,
-      bucketCols: Seq[String], maxBucket: Int = 2000): DataFrame = {
-    graft.functions.GraftFunctions.register(banded.sparkSession)
-    require(bucketCols.contains(keyCol),
-      s"keyCol '$keyCol' must be one of the bucket columns")
-    val idType = banded.schema(idCol).dataType
-    require(idType.isInstanceOf[org.apache.spark.sql.types.NumericType],
-      s"pairsFromBucketsKeyed requires a numeric id column; " +
-        s"'$idCol' is ${idType.simpleString}")
-    val rows = banded.select((bucketCols :+ idCol).map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val ids = array_sort(collect_list(col(idCol).cast(LongType)))
-      // pinned width for the in-bucket pair explode (byte-sparse,
-      // compute-dense — the [[Par]] rule; collect_list has no map-side
-      // reduction so the moved exchange is byte-neutral)
-      dropHotBuckets(rows, bucketCols, maxBucket.toLong)
-        .transform(Par.byKey(_, bucketCols.map(col): _*))
-        .groupBy(bucketCols.map(col): _*)
-        .agg(ids.as("ids"))
-        .filter(size(col("ids")) > 1)
-        .select(col(keyCol), explode(
-          graft.functions.PairFunctions.pairCombinations(col("ids"))).as("p"))
-        .select(col(keyCol), col("p.id_a"), col("p.id_b"))
-        .distinct()
-        .localCheckpoint(true)
-    } finally rows.unpersist()
-  }
-
   /** MINHASH-LSH BAND SWEEP — the knob-pricing frontier for the dedup
     * index, the exact counterpart of [[Similarity.ivfRecallSweep]] for
     * the ANN family: for each band count `b` in `bandsSweep` (rows per
@@ -484,7 +489,8 @@ object Dedup {
     *
     * ONE bucket shuffle for the whole sweep: every configuration's
     * banded rows go into a single `(bands, band, band_hash)`-keyed
-    * frame, pair generation groups once ([[pairsFromBucketsKeyed]]),
+    * frame, pair generation groups once ([[pairsFromBuckets]] keyed
+    * on `bands`),
     * and the signature table (computed once, k components) verifies all
     * configs' candidates in one join. Ground truth is computed once and
     * shared. Counts are exact longs; precision/recall are single
@@ -524,8 +530,8 @@ object Dedup {
               .cast(IntegerType), col("rpb").cast(IntegerType)),
             _.cast(StringType))),
           lit("|"), col("band").cast(StringType))))
-      val pairs = pairsFromBucketsKeyed(banded, idCol, "bands",
-        Seq("bands", "band", "band_hash"), maxBucket)
+      val pairs = pairsFromBuckets(banded, idCol,
+        Seq("bands", "band", "band_hash"), maxBucket, keyCol = Some("bands"))
       val simed = pairs
         .join(sigs.select(col(idCol).as("id_a"), col("sig").as("sig_a")),
           Seq("id_a"))
@@ -660,36 +666,6 @@ object Dedup {
     agged.select(col(idCol), packed.as("simhash"))
   }
 
-  /** Distinct candidate pairs like [[pairsFromBuckets]], but carrying one
-    * small payload column per id through the bucket aggregation, so
-    * verification needs NO join back onto the signature table (a join-back
-    * re-executes the whole signature pipeline per side, or forces a
-    * persist). The payload rides the one (bucket, id) shuffle — only
-    * worth it for scalar payloads; wide payloads (vectors, long
-    * signatures) are cheaper to join back from a persisted side. */
-  private[operators] def pairsFromBucketsWithPayload(
-      banded: DataFrame, idCol: String, payloadCol: String,
-      bucketCols: Seq[String], maxBucket: Int = 2000): DataFrame = {
-    graft.functions.GraftFunctions.register(banded.sparkSession)
-    val rows = banded
-      .select((bucketCols :+ idCol :+ payloadCol).map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val entry = struct(col(idCol).as("id"), col(payloadCol).as("pl"))
-      dropHotBuckets(rows, bucketCols, maxBucket.toLong)
-        .groupBy(bucketCols.map(col): _*)
-        .agg(array_sort(collect_list(entry)).as("es"))
-        .filter(size(col("es")) > 1)
-        .select(explode(graft.functions.PairFunctions
-          .pairCombinationsStruct(col("es"))).as("p"))
-        .select(col("p.a"), col("p.b"))
-        .distinct() // payload is functionally dependent on id
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          col("a.pl").as(s"${payloadCol}_a"), col("b.pl").as(s"${payloadCol}_b"))
-        .localCheckpoint(true)
-    } finally rows.unpersist()
-  }
-
   /** SimHash near-duplicates: pairs within `maxHamming` bits. Candidate
     * generation bands the 60-bit hash into 4×15-bit chunks (pigeonhole: any
     * pair within hamming < 4 shares ≥1 exact chunk — we use it as a
@@ -707,8 +683,8 @@ object Dedup {
         explode(sequence(lit(0), lit(3))).as("chunk"))
       .withColumn("chunk_val",
         expr("shiftright(simhash, CAST(chunk * 15 AS INT)) & 32767"))
-    val pairs = pairsFromBucketsWithPayload(chunked, idCol, "simhash",
-      Seq("chunk", "chunk_val"))
+    val pairs = pairsFromBuckets(chunked, idCol, Seq("chunk", "chunk_val"),
+      payloadCol = Some("simhash"))
     // Seal the verified (small) pair set and free the candidate
     // checkpoint — same storage-lifetime contract as the minhash family.
     Lifetime.seal(
@@ -1066,17 +1042,9 @@ object Dedup {
     // with the global floor REMOVED. collect_list has no map-side
     // reduction, so moving the exchange below the partial aggregate is
     // byte-neutral.
-    def coldPairs(rows: DataFrame): DataFrame = Par.byKey(rows, col("h"))
-      .groupBy(col("h"))
-      .agg(array_sort(collect_list(
-        struct(col("id"), col("set_size"), col("pos")))).as("es"))
-      .filter(size(col("es")) > 1)
-      .select(explode(graft.functions.PairFunctions
-        .pairCombinationsStruct(col("es"))).as("p"))
-      .select(col("p.a.id").as("id_a"), col("p.b.id").as("id_b"),
-        col("p.a.set_size").as("size_a"),
-        col("p.b.set_size").as("size_b"),
-        col("p.a.pos").as("pos_a"), col("p.b.pos").as("pos_b"))
+    val entry = Seq("id", "set_size", "pos")
+    def coldPairs(rows: DataFrame): DataFrame =
+      bucketPairs(Par.byKey(rows, col("h")), Seq("h"), entry)
     val pairStructs = hot.count() match {
       case 0L => coldPairs(postings)
       case nHot =>
@@ -1099,21 +1067,12 @@ object Dedup {
           // the quadratic stage salting exists to spread — they must
           // not be re-collapsed by byte-driven coalescing
           .transform(Par.byKey(_, col("h"), col("lo"), col("hi")))
-          .groupBy(col("h"), col("lo"), col("hi"))
-          .agg(array_sort(collect_list(struct(
-            col("id"), col("set_size"), col("pos"), col("blk")))).as("es"))
-          .filter(size(col("es")) > 1)
-          .select(col("lo"), col("hi"),
-            explode(graft.functions.PairFunctions
-              .pairCombinationsStruct(col("es"))).as("p"))
+          .transform(bucketPairs(_, Seq("h", "lo", "hi"), entry :+ "blk",
+            carry = Seq("lo", "hi")))
           // mixed (lo < hi) groups hold both blocks' entries: keep only
           // CROSS pairs — in-block pairs belong to the (b, b) groups
-          .filter(col("lo") === col("hi") ||
-            col("p.a.blk") =!= col("p.b.blk"))
-          .select(col("p.a.id").as("id_a"), col("p.b.id").as("id_b"),
-            col("p.a.set_size").as("size_a"),
-            col("p.b.set_size").as("size_b"),
-            col("p.a.pos").as("pos_a"), col("p.b.pos").as("pos_b"))
+          .filter(col("lo") === col("hi") || col("blk_a") =!= col("blk_b"))
+          .select(entry.flatMap(f => Seq(col(s"${f}_a"), col(s"${f}_b"))): _*)
         coldPairs(postings.join(hotJ.select(col("h")), Seq("h"), "left_anti"))
           .unionAll(salted)
     }
@@ -1121,11 +1080,11 @@ object Dedup {
     // both the candidate-id set and the final join (a lazy diamond would
     // re-run the pairing stages per consumer).
     val ubound = least(col("pos_a"), col("pos_b")) +
-      least(col("size_a") - col("pos_a"), col("size_b") - col("pos_b"))
+      least(col("set_size_a") - col("pos_a"), col("set_size_b") - col("pos_b"))
     val cand = pairStructs
-      .filter(col("size_b") >= tDec * col("size_a") &&
-        col("size_a") >= tDec * col("size_b"))
-      .filter(ubound >= tDec * (col("size_a") + col("size_b") - ubound))
+      .filter(col("set_size_b") >= tDec * col("set_size_a") &&
+        col("set_size_a") >= tDec * col("set_size_b"))
+      .filter(ubound >= tDec * (col("set_size_a") + col("set_size_b") - ubound))
       .select(col("id_a"), col("id_b"))
       .distinct()
       .localCheckpoint(true)
@@ -1204,15 +1163,11 @@ object Dedup {
       // Hot-fingerprint pre-filter BEFORE bucket materialization
       // ([[dropHotBuckets]]): a boilerplate fingerprint present in
       // millions of documents must never reach collect_list.
-      dropHotBuckets(postings, Seq("fp"), maxDocFreq, maxBroadcastHot)
-        .groupBy(col("fp"))
-        .agg(array_sort(collect_list(
-          struct(col("id"), col("set_size")))).as("es"))
-        .filter(size(col("es")) > 1)
-        .select(explode(graft.functions.PairFunctions
-          .pairCombinationsStruct(col("es"))).as("p"))
-        .groupBy(col("p.a.id").as("id_a"), col("p.b.id").as("id_b"),
-          col("p.a.set_size").as("size_a"), col("p.b.set_size").as("size_b"))
+      bucketPairs(
+          dropHotBuckets(postings, Seq("fp"), maxDocFreq, maxBroadcastHot),
+          Seq("fp"), Seq("id", "set_size"))
+        .groupBy(col("id_a"), col("id_b"),
+          col("set_size_a").as("size_a"), col("set_size_b").as("size_b"))
         .agg(count(lit(1)).as("n_common"))
         .filter(col("n_common") >= minShared)
         .withColumn("jaccard_fp",
@@ -1277,15 +1232,10 @@ object Dedup {
       .select(col("id"), size(col("sh_arr")).cast(LongType).as("set_size"),
         explode(col("sh_arr")).as("shingle"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs = dropHotBuckets(sh, Seq("shingle"), maxDocFreq)
-      .groupBy(col("shingle"))
-      .agg(array_sort(collect_list(
-        struct(col("id"), col("set_size")))).as("es"))
-      .filter(size(col("es")) > 1)
-      .select(explode(graft.functions.PairFunctions
-        .pairCombinationsStruct(col("es"))).as("p"))
-      .groupBy(col("p.a.id").as("id_a"), col("p.b.id").as("id_b"),
-        col("p.a.set_size").as("size_a"), col("p.b.set_size").as("size_b"))
+    val pairs = bucketPairs(dropHotBuckets(sh, Seq("shingle"), maxDocFreq),
+        Seq("shingle"), Seq("id", "set_size"))
+      .groupBy(col("id_a"), col("id_b"),
+        col("set_size_a").as("size_a"), col("set_size_b").as("size_b"))
       .agg(count(lit(1)).as("n_common"))
     (pairs, sh)
   }

@@ -137,7 +137,7 @@ object Embeddings {
     * Scale shape: one corpus pass to the (label, dim) partial sums
     * (map-side combined; the shuffle carries labels×d rows), centroids
     * gather per label, and the pair expansion runs inside ONE
-    * class-cardinality-bounded row via `pair_combinations_struct` —
+    * class-cardinality-bounded bucket via [[Dedup.bucketPairs]] —
     * label counts are dozens-to-thousands, never corpus-sized, so the
     * K² pairs are trivially bounded and no corpus self-join exists. */
   def labelCentroidSimilarity(df: DataFrame, labelCol: String,
@@ -153,13 +153,9 @@ object Embeddings {
       .groupBy(col("label"))
       .agg(array_sort(collect_list(struct(col("i"), col("m"))))
         .getField("m").as("centq"))
-    val pairs = cent
-      .agg(array_sort(collect_list(struct(col("label"), col("centq"))))
-        .as("es"))
-      .select(explode(graft.functions.PairFunctions
-        .pairCombinationsStruct(col("es"))).as("p"))
-      .select(col("p.a.label").as("label_a"), col("p.b.label").as("label_b"),
-        col("p.a.centq").as("ca"), col("p.b.centq").as("cb"))
+    val pairs = Dedup.bucketPairs(cent, Nil, Seq("label", "centq"))
+      .select(col("label_a"), col("label_b"),
+        col("centq_a").as("ca"), col("centq_b").as("cb"))
     val denom = V.normQ12(col("ca")) * V.normQ12(col("cb"))
     pairs.select(col("label_a"), col("label_b"),
       when(denom === 0.0, lit(null).cast(DoubleType))

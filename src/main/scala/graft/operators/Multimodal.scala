@@ -1057,8 +1057,8 @@ object Multimodal {
         explode(sequence(lit(0), lit(3))).as("chunk"))
       .withColumn("chunk_val",
         expr("shiftright(phash, CAST(chunk * 15 AS INT)) & 32767"))
-    val pairs = Dedup.pairsFromBucketsWithPayload(chunked, "media_id",
-      "phash", Seq("chunk", "chunk_val"), maxBucket)
+    val pairs = Dedup.pairsFromBuckets(chunked, "media_id",
+      Seq("chunk", "chunk_val"), maxBucket, payloadCol = Some("phash"))
     graft.operators.Lifetime.seal(
       pairs.select(col("id_a"), col("id_b"),
           bit_count(col("phash_a").bitwiseXOR(col("phash_b")))

@@ -1325,7 +1325,7 @@ object TextAnalysis {
     *
     * Scale shape: one corpus scan (the [[vocabulary]] count) collapses
     * everything to the k-row vocabulary; postings fan out O(k·len) keys,
-    * pairs expand in-bucket via the `pair_combinations_struct` kernel
+    * pairs expand in-bucket via [[Dedup.bucketPairs]]
     * (buckets are variant-keyed — bounded by alphabet × len, no hot
     * key), and verification is per-candidate. Output: `(tok_a, tok_b,
     * freq_a, freq_b, survivor)`, `tok_a < tok_b`, survivor = the
@@ -1358,21 +1358,15 @@ object TextAnalysis {
   /** The blocking+verify tail of [[fuzzyVocabPairs]] over any
     * `(token, freq)` vocabulary frame. */
   def fuzzyPairs(vocab: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(vocab.sparkSession)
     val dels = transform(sequence(lit(1), length(col("token"))),
       i => concat(col("token").substr(lit(1), i - 1),
         col("token").substr(i + 1, length(col("token")))))
     val posts = vocab.select(col("token"), col("freq"),
       explode(array_union(array(col("token")), array_distinct(dels)))
         .as("variant"))
-    posts.groupBy(col("variant"))
-      .agg(array_sort(collect_list(struct(col("token"), col("freq"))))
-        .as("es"))
-      .filter(size(col("es")) > 1)
-      .select(explode(graft.functions.PairFunctions
-        .pairCombinationsStruct(col("es"))).as("p"))
-      .select(col("p.a.token").as("tok_a"), col("p.b.token").as("tok_b"),
-        col("p.a.freq").as("freq_a"), col("p.b.freq").as("freq_b"))
+    Dedup.bucketPairs(posts, Seq("variant"), Seq("token", "freq"))
+      .select(col("token_a").as("tok_a"), col("token_b").as("tok_b"),
+        col("freq_a"), col("freq_b"))
       .distinct()
       .filter(levenshtein(col("tok_a"), col("tok_b")) === 1)
       .withColumn("survivor",

@@ -250,4 +250,84 @@ class KernelPropertySpec extends SparkSpec {
           .longValue(), s"expr vs impl (${r.getLong(0)},${r.getLong(1)})")
     }
   }
+
+  test("property: bucketPairs == sorted in-bucket index pairs (i < j), with and without carry") {
+    type Entry = (Long, Option[Int])
+    // a null payload sorts first among equal ids, as in array_sort
+    val entryOrder: Ordering[Entry] =
+      Ordering.Tuple2(Ordering.Long, Ordering.Option(Ordering.Int))
+    val rnd = new scala.util.Random(20261018L)
+    val generated = (0 until 24).map { c =>
+      val nBuckets = 1 + rnd.nextInt(5)
+      (c, Seq.fill(rnd.nextInt(30))((rnd.nextInt(nBuckets), rnd.nextInt(12)
+        .toLong, if (rnd.nextInt(5) == 0) None else Some(rnd.nextInt(3)))))
+    }
+    val fixed = Seq(
+      Seq((0, 1L, Some(1)), (1, 2L, Some(1)), (2, 3L, None)), // singletons
+      Seq((0, 5L, Some(1)), (0, 6L, Some(2)), (1, 5L, Some(1)),
+        (1, 7L, None), (2, 5L, Some(1)), (2, 6L, Some(2))), // id in 3 buckets
+      Seq((0, 4L, Some(1)), (0, 4L, Some(1)), (0, 4L, None),
+        (0, 3L, Some(2)))) // duplicate ids inside one bucket, null payload
+    val cases = generated ++ fixed.zipWithIndex.map { case (rows, i) =>
+      (100 + i, rows) }
+    val rows = for ((c, rs) <- cases; (b, id, pl) <- rs) yield (c, b, id, pl)
+    val df = rows.toDF("case", "bucket", "id", "pl")
+    val model: Seq[((Int, Int), Entry, Entry)] =
+      rows.groupBy(r => (r._1, r._2)).toSeq.flatMap { case (key, rs) =>
+        val es = rs.map(r => (r._3, r._4)).sorted(entryOrder).toIndexedSeq
+        for (i <- es.indices; j <- i + 1 until es.size)
+          yield (key, es(i), es(j))
+      }
+    def pl(r: org.apache.spark.sql.Row, i: Int): Option[Int] =
+      if (r.isNullAt(i)) None else Some(r.getInt(i))
+    val carried = Dedup.bucketPairs(df, Seq("case", "bucket"), Seq("id", "pl"),
+      carry = Seq("case", "bucket"))
+    assert(carried.columns.toSeq ==
+      Seq("case", "bucket", "id_a", "id_b", "pl_a", "pl_b"))
+    val got = carried.collect().toSeq.map(r => ((r.getInt(0), r.getInt(1)),
+      (r.getLong(2), pl(r, 4)), (r.getLong(3), pl(r, 5))))
+    val byTriple = Ordering.by[((Int, Int), Entry, Entry),
+      (Int, Int, Long, Option[Int], Long, Option[Int])] {
+      case ((c, b), (ia, pa), (ib, pb)) => (c, b, ia, pa, ib, pb) }
+    assert(got.sorted(byTriple) == model.sorted(byTriple))
+    val bare = Dedup.bucketPairs(df, Seq("case", "bucket"), Seq("id", "pl"))
+    assert(bare.columns.toSeq == Seq("id_a", "id_b", "pl_a", "pl_b"))
+    val pairOrder = Ordering.by[(Entry, Entry),
+      (Long, Option[Int], Long, Option[Int])] {
+      case ((ia, pa), (ib, pb)) => (ia, pa, ib, pb) }
+    assert(bare.collect().toSeq.map(r => ((r.getLong(0), pl(r, 2)),
+        (r.getLong(1), pl(r, 3)))).sorted(pairOrder) ==
+      model.map(m => (m._2, m._3)).sorted(pairOrder))
+    // on distinct entries the same set is the naive self-join
+    val d = df.distinct()
+    val selfJoin = d.as("a").join(d.as("b"),
+        col("a.case") === col("b.case") && col("a.bucket") === col("b.bucket") &&
+          struct(col("a.id"), col("a.pl")) < struct(col("b.id"), col("b.pl")))
+      .select(col("a.case"), col("a.bucket"), col("a.id"), col("b.id"),
+        col("a.pl"), col("b.pl"))
+    val fromPrimitive = Dedup.bucketPairs(d, Seq("case", "bucket"),
+      Seq("id", "pl"), carry = Seq("case", "bucket"))
+    assert(fromPrimitive.exceptAll(selfJoin).isEmpty &&
+      selfJoin.exceptAll(fromPrimitive).isEmpty)
+    val empty = Seq.empty[(Int, Long, Option[Int])].toDF("bucket", "id", "pl")
+    assert(Dedup.bucketPairs(empty, Seq("bucket"), Seq("id", "pl"),
+      carry = Seq("bucket")).isEmpty)
+    assert(Dedup.bucketPairs(empty, Seq("bucket"), Seq("id", "pl")).isEmpty)
+  }
+
+  test("pair_combinations_struct refuses a bucket whose pair count overflows an array") {
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import graft.functions.PairCombinationsStructImpl
+    // n = 46 342 is the first size whose Int product n(n-1) wraps; its
+    // pair count still fits one array
+    assert(PairCombinationsStructImpl.pairCount(46342) == 1073767311L)
+    // n = 65 537 is the first size whose pair count does not
+    val n = 65537
+    val entries = new GenericArrayData(Array.tabulate[Any](n)(i =>
+      new GenericInternalRow(Array[Any](i.toLong))))
+    val e = intercept[IllegalArgumentException](
+      PairCombinationsStructImpl.compute(entries, 1))
+    assert(e.getMessage.contains(s"a bucket of $n entries"), e.getMessage)
+  }
 }
