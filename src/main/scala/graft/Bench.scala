@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the full query inventory on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
   * `{"metric":…,"value":N,"unit":"sec","queries":{…},"sf":…}`.
@@ -13,15 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = EngineDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = EngineDefaults.builder("graft-bench", EngineDefaults.cpus())
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -32,11 +22,7 @@ object Bench {
     // GC-driven ContextCleaner returns them — the r7 pass-over-pass
     // drift. Swept OUTSIDE the timed region, blocking, so each
     // measurement starts from the same (empty) block-manager state.
-    def sweep(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-    }
+    def sweep(): Unit = graft.operators.Lifetime.sweep(spark)
     // Shuffle files and broadcast blocks are only reclaimed when GC
     // finalizes their dependency objects (ContextCleaner); on a 128 GiB
     // heap that can be never within a bench run, so hundreds of executed

@@ -2,57 +2,51 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine-wide session defaults shared by every driver-facing main
-  * (Bench / Verify / Stages / PlanDump / rehearsal mains, the logger and
-  * dashboard CLIs).
+/** Engine-wide session settings; [[builder]] builds every session: `Bench`,
+  * `Verify`, `Profile`, the rehearsal mains, both CLIs and the tests.
   *
-  * Round-13 optimization findings (OPTIMIZATION_r13.md, measured on the
-  * 57-query alphabetical-prefix subset bench at sf0.1):
+  * The codegen cache holds 8192 entries, not Spark's 100: the registry's
+  * 261 query shapes carry 10-25 whole-stage-codegen units each, so a
+  * 100-entry cache makes every execution re-run Janino for its whole plan
+  * on one thread while the executors wait (OPTIMIZATION_r13.md: a 57-query
+  * pass at sf0.1 went from 132 s to 56 s). Compiled classes cost tens of
+  * KB each.
   *
-  *  - `spark.sql.codegen.cache.maxEntries` (default 100): the registry
-  *    holds 261 query shapes × ~10-25 whole-stage-codegen units each, so
-  *    the 100-entry JVM-wide cache thrashes — EVERY query re-runs Janino
-  *    compilation for its whole plan on EVERY execution, single-threaded
-  *    on the driver while all executor threads sit parked (thread dumps:
-  *    32/32 executors idle, main inside codegen). Raising the cache to
-  *    cover the inventory cut the 57-query pass 132 s → 56 s. This is a
-  *    driver-JVM property, not a local[32] artifact: any production
-  *    driver serving a query inventory larger than ~100 codegen units
-  *    pays the same recompilation tax per query. 8192 entries ≈ the full
-  *    261-query inventory with margin; compiled-class footprint is
-  *    metaspace-bounded (~tens of KB per unit).
+  * There is no global AQE `coalescePartitions.minPartitionSize` floor: it
+  * widens every byte-sparse exchange, the memory-heavy dedup aggregates
+  * included, and a 64 KB floor kept the 32-core bench from finishing.
+  * [[graft.operators.Par]] pins the width only at compute-dense stages.
   *
-  * Round-14 change: round 13 ALSO floored
-  * `spark.sql.adaptive.coalescePartitions.minPartitionSize` at 64 KB to
-  * stop AQE from coalescing compute-dense, byte-sparse reduce stages to
-  * 2-3 tasks. That global knob widened EVERY byte-sparse exchange —
-  * including the memory-heavy dedup hash aggregates — and is the prime
-  * suspect in the round-13 32-core driver-bench DNF (pathological pass-2
-  * excursions concentrated on exactly those queries under the fixed 8 GB
-  * heap). Round 14 removes the floor (back to Spark's 1 MB default) and
-  * instead pins the width STRUCTURALLY at the stages where compute
-  * density is known — see [[graft.operators.Par]] — so every other
-  * exchange keeps the byte-driven coalescing that bounds concurrent
-  * memory. The env override remains for per-deployment tuning.
-  *
-  * The `file:` scheme resolves to [[graft.sinks.ForkFreeLocalFileSystem]]
-  * (and its `FileContext` twin): Hadoop's local filesystem minus the
-  * `chmod`/`readlink` process forks it falls back to without libhadoop,
-  * which were a large share of a logger poll's fixed write cost.
+  * `file:` resolves to [[graft.sinks.ForkFreeLocalFileSystem]] (and its
+  * `FileContext` twin): Hadoop's local filesystem without the `chmod` /
+  * `readlink` forks it falls back to without libhadoop.
   */
 object EngineDefaults {
-  def apply(b: SparkSession.Builder): SparkSession.Builder = {
-    val b1 = b
-      .config("spark.hadoop.fs.file.impl",
+  def apply(b: SparkSession.Builder): SparkSession.Builder =
+    b.config("spark.hadoop.fs.file.impl",
         classOf[graft.sinks.ForkFreeLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[graft.sinks.ForkFreeLocalFs].getName)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-    sys.env.get("SPARK_GRAFT_MIN_PARTITION_SIZE") match {
-      case Some(v) => b1.config(
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize", v)
-      case None => b1
-    }
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
+
+  /** Threads of a local session: `SPARK_GRAFT_CPUS`, else `default`. */
+  def cpus(default: Int = 32): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.toInt)
+
+  /** A session builder with the engine defaults, `cpus` shuffle
+    * partitions, AQE with partition coalescing, UTC, and no UI unless
+    * `ui`. The master is `master`, else `local[cpus]`; a master that
+    * spark-submit set (the `spark.master` property) wins over both. */
+  def builder(appName: String, cpus: Int, master: Option[String] = None,
+      ui: Boolean = false): SparkSession.Builder = {
+    val b = apply(SparkSession.builder())
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+    val b1 = if (ui) b else b.config("spark.ui.enabled", "false")
+    if (sys.props.contains("spark.master")) b1
+    else b1.master(master.getOrElse(s"local[$cpus]"))
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-rehearsal data generator: a deterministic sf1-shaped
   * `documents` / `embeddings` pair (10× the driver's sf0.1, which is
   * where the provided testdata stops) so the dedup/ANN family's
@@ -38,7 +36,8 @@ object GenRehearsal {
   private val Langs = Array("en", "zh", "es", "fr", "de")
   private val LangCum = Array(41, 56, 71, 86, 100)
 
-  private def mix(z0: Long): Long = {
+  /** splitmix64's finalizer: the rehearsal data's only randomness. */
+  private[graft] def mix(z0: Long): Long = {
     var z = z0 + 0x9e3779b97f4a7c15L
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
     z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
@@ -51,14 +50,8 @@ object GenRehearsal {
     val outDir = args(0)
     val docRows = if (args.length > 1) args(1).toLong else 50000L
     val vecRows = if (args.length > 2) args(2).toLong else 20000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = EngineDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .appName("graft-gen-rehearsal")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = EngineDefaults
+      .builder("graft-gen-rehearsal", EngineDefaults.cpus()).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

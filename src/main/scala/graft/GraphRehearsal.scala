@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** 10× scale rehearsal for the ITERATIVE GRAPH KERNELS — the most
   * expensive bench family (pagerank/ppr/kcore/bfs/hits, 4–6 s at
   * sf0.1), whose SCALE.md claims (edge list hash-partitioned once,
@@ -23,34 +21,19 @@ import org.apache.spark.sql.SparkSession
   * `runMain graft.GraphRehearsal <scale> [reps=4] [outDir]` — prints
   * one JSON line per kernel: `{"kernel":…,"scale":…,"edges":…,
   * "sec":…}` — the MEDIAN of the post-warmup reps (rep 1 discarded
-  * as JIT warmup when reps > 1, mirroring `graft.Probe`'s
+  * as JIT warmup when reps > 1, mirroring `graft.Profile`'s
   * read-from-rep-2 rule; the default leaves 3 measured reps so the
   * median is a true middle element, and even measured counts take
   * the lower middle — never the max).
   */
 object GraphRehearsal {
-  private def mix(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-
   def main(args: Array[String]): Unit = {
     val scale = if (args.length > 0) args(0).toInt else 1
     val reps = if (args.length > 1) args(1).toInt else 4
     val outDir = if (args.length > 2) args(2)
       else s"${System.getProperty("java.io.tmpdir")}/graft_graph_rehearsal"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = EngineDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .appName("graft-graph-rehearsal")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = EngineDefaults
+      .builder("graft-graph-rehearsal", EngineDefaults.cpus()).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -63,7 +46,8 @@ object GraphRehearsal {
     // encoding; distinct() mirrors the real pipeline's pair dedup
     spark.range(nc).flatMap { c =>
         (0 until picks).map { j =>
-          (c * 2L, ((mix(c * 1000003L + j) >>> 8) % ns) * 2L + 1L)
+          val s = (GenRehearsal.mix(c * 1000003L + j) >>> 8) % ns
+          (c * 2L, s * 2L + 1L)
         }
       }
       .toDF("src", "dst").distinct()
@@ -79,20 +63,14 @@ object GraphRehearsal {
     System.err.println(s"[graph-rehearsal] scale $scale: $nEdges edges " +
       s"($nc customers, $ns suppliers)")
 
-    // Bench's per-measurement hygiene: kernels seal results as local
-    // checkpoints — sweep them between reps so rep N starts from the
-    // same block-manager state as rep 1 (edges live in parquet, safe)
-    def sweep(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-    }
     def bench(name: String)(f: => Long): Unit = {
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         f
         val s = (System.nanoTime() - t0) / 1e9
-        sweep()
+        // kernels seal results as local checkpoints: sweep them so rep N
+        // starts from rep 1's block-manager state (edges live in parquet)
+        graft.operators.Lifetime.sweep(spark)
         s
       }
       val measured = if (reps > 1) times.tail else times

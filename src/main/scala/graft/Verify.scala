@@ -1,23 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  val Usage = "usage: Verify <sfDir> <outDir> [query1,query2,...]"
+
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query names — dev-side subset
     // runs (check_oracle.py compares only the dirs present); the driver
     // always passes 2 args and gets the full registry.
-    val (sfDir, outDir, only) = args match {
-      case Array(s, o)     => (s, o, Option.empty[Set[String]])
-      case Array(s, o, qs) => (s, o, Some(qs.split(",").toSet))
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = EngineDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    require(args.length == 2 || args.length == 3, Usage)
+    val Array(sfDir, outDir) = args.take(2)
+    val only = args.lift(2).map(_.split(",").toSet)
+    val spark = EngineDefaults.builder("graft-verify", EngineDefaults.cpus(4))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
@@ -43,29 +40,17 @@ object Verify {
         } catch { case _: Throwable => () }
       }
       // free sealed results between queries (the Bench sweep discipline)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
+      graft.operators.Lifetime.sweep(spark)
       System.gc() // release dead shuffle/broadcast state (see Bench.sweep)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = failures
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/_errors.json"), errJson)
+    // Jackson escapes every control character, so a tab or CR inside an
+    // oracle query still parses; an unreadable oracle_sql.json would
+    // silently zero the correctness compare.
+    val json = new ObjectMapper().registerModule(DefaultScalaModule)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      json.writeValueAsString(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/_errors.json"),
+      json.writeValueAsString(failures))
     // Exit 0 even on per-query failure (the driver must still run the
     // DuckDB compare over the good queries) — the loudness is the
     // never-matching __query_error parquet + _errors.json + this line.

@@ -1,7 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.Dashboard
 import graft.schema.FieldCatalog
 import graft.sinks.FanOutSink
@@ -22,14 +20,9 @@ object DashboardCli {
     val start = if (args.length > 3) args(3) else "1970-01-01 00:00:00"
     val end = if (args.length > 4) args(4) else "2100-01-01 00:00:00"
 
-    val builder0 = graft.EngineDefaults(SparkSession.builder())
-    val spark = (if (sys.props.contains("spark.master")) builder0
-      else builder0.master(sys.env.getOrElse("SPARK_MASTER", "local[*]")))
-      .appName("purpleair-dashboard")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.EngineDefaults
+      .builder("purpleair-dashboard", graft.EngineDefaults.cpus(),
+        master = Some(sys.env.getOrElse("SPARK_MASTER", "local[*]")))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -292,15 +292,10 @@ object DataLoggerCli {
 
   def main(args: Array[String]): Unit = {
     val c = parseArgs(args)
-    // spark-submit provides the master on a cluster; default for bare runs
-    val builder0 = graft.EngineDefaults(SparkSession.builder())
-    val builder = if (sys.props.contains("spark.master")) builder0
-      else builder0.master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-    val spark = builder
-      .appName("purpleair-data-logger")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.EngineDefaults
+      .builder("purpleair-data-logger", graft.EngineDefaults.cpus(),
+        master = Some(sys.env.getOrElse("SPARK_MASTER", "local[*]")),
+        ui = true)
       .getOrCreate()
 
     if (confirmDrop(c)) {

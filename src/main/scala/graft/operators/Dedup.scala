@@ -307,8 +307,8 @@ object Dedup {
       // pinned width for the in-bucket pair explode (byte-sparse,
       // compute-dense — the [[Par]] rule; collect_list has no map-side
       // reduction so the moved exchange is byte-neutral). The payload
-      // form stays at AQE's byte-driven width: pinning it is a plan
-      // change no measurement has priced yet.
+      // form (SimHash, phash) keeps AQE's width, one reduce task at sf0.1
+      // local[4]: a pin to 4 took phash's median 1079 → 1307 ms.
       val pinned =
         if (payloadCol.isEmpty) Par.byKey(kept, bucketCols.map(col): _*)
         else kept

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Storage-lifetime control for eagerly-materialized (`localCheckpoint`)
   * intermediate results.
@@ -21,9 +21,8 @@ import org.apache.spark.sql.DataFrame
   *    operator call are freed by that operator (via [[seal]]) once the
   *    final result is materialized;
   *  - a checkpointed RESULT belongs to the caller — release it with
-  *    [[free]] when done, or rely on session-level hygiene
-  *    (`sparkContext.getPersistentRDDs` sweep, as `graft.Bench` does
-  *    between queries).
+  *    [[free]] when done, or [[sweep]] the session between queries, as
+  *    the mains do.
   */
 object Lifetime {
 
@@ -51,5 +50,15 @@ object Lifetime {
     val out = result.localCheckpoint(true)
     free(intermediates: _*)
     out
+  }
+
+  /** Session-level hygiene for the caller-owned results above: unpersists
+    * every persisted RDD of the session, blocking, and clears the SQL
+    * cache. For a main between two queries, never inside an operator:
+    * whatever the session still reads from a swept checkpoint fails. */
+  def sweep(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    spark.catalog.clearCache()
   }
 }

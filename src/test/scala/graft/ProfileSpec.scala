@@ -1,0 +1,55 @@
+package graft
+
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+
+class ProfileSpec extends SparkSpec {
+  private val names = Seq("q_dedup_minhash", "q_no_such_query", "q_a3_directory")
+
+  private lazy val reports: Map[String, JsonNode] = {
+    val out = Files.createTempDirectory("graft_profile")
+    val sfDir = new java.io.File(sf("documents")).getParent
+    Profile.run(spark, out, names, sfDir, reps = 1)
+    names.map(n => n -> new ObjectMapper().readTree(
+      out.resolve(s"$n.json").toFile)).toMap
+  }
+
+  private def rep(name: String): JsonNode = reports(name).get("reps").get(0)
+  private def executions = rep("q_dedup_minhash").get("executions").asScala.toSeq
+
+  test("a sealed query lists the SQL executions it ran") {
+    assert(executions.size >= 2, executions.map(_.get("action")))
+  }
+
+  test("the executed plans show the pair stage, not only the sealed scan") {
+    val plans = executions.map(_.get("plan").asScala.map(_.asText).mkString("\n"))
+    assert(plans.exists(p => p.contains("ObjectHashAggregate") &&
+      p.contains("pair_combinations_struct")), plans.mkString("\n----\n"))
+  }
+
+  test("every stage with tasks names an execution the report lists") {
+    val ids = executions.map(_.get("id").asLong()).toSet
+    val stages = rep("q_dedup_minhash").get("stages").asScala.toSeq
+      .filter(_.get("tasks").asInt() > 0)
+    // Parquet schema inference runs its one-task job when the table is
+    // read, outside any SQL execution: the only stage without one.
+    val (outside, inside) = stages.partition(_.get("execution").isNull)
+    assert(outside.forall(_.get("name").asText().startsWith("parquet at")),
+      outside.mkString("\n"))
+    assert(inside.nonEmpty)
+    inside.foreach(s => assert(ids(s.get("execution").asLong()), s.toString))
+  }
+
+  test("an unknown name writes an error entry and the sweep goes on") {
+    val bad = reports("q_no_such_query")
+    assert(bad.get("error").asText().contains("q_no_such_query"))
+    assert(bad.get("reps").isEmpty)
+    val next = reports("q_a3_directory")
+    assert(next.get("error").isNull)
+    assert(next.get("reps").size() == 1)
+    assert(rep("q_a3_directory").get("executions").size() >= 1)
+  }
+}

@@ -42,13 +42,8 @@ object SparkSpec {
     // cache sized to the inventory, a 690-test run re-Janino-compiles
     // every plan (the round-13 bench bottleneck) — the r13 driver-side
     // `sbt test` DNF'd on time with the default 100-entry cache.
-    val s = EngineDefaults(SparkSession.builder())
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = EngineDefaults.builder("graft-test", 4)
       .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
