@@ -17,6 +17,10 @@ import org.apache.spark.sql.SparkSession
   * included, and a 64 KB floor kept the 32-core bench from finishing.
   * [[graft.operators.Par]] pins the width only at compute-dense stages.
   *
+  * Join strategy is AQE's runtime choice, under
+  * `spark.sql.adaptive.autoBroadcastJoinThreshold`: operators hint a
+  * broadcast only where the build side is bounded by construction.
+  *
   * `file:` resolves to [[graft.sinks.ForkFreeLocalFileSystem]] (and its
   * `FileContext` twin): Hadoop's local filesystem without the `chmod` /
   * `readlink` forks it falls back to without libhadoop.

@@ -25,10 +25,9 @@ import graft.operators.Lifetime
   * so a sealed result's `Scan ExistingRDD` shows what made it; every
   * completed stage (time, tasks, input, shuffle read and write, spill, GC,
   * the largest task's peak execution memory) with the execution whose job
-  * ran it. Jobs Spark runs outside any SQL execution, such as parquet
-  * schema inference on read, leave `execution` null. Rep 1 carries JIT
-  * and first-scan warmup. A name that is unknown or fails writes
-  * `{"query": …, "error": …}` and the sweep goes on.
+  * ran it. Jobs Spark runs outside any SQL execution leave `execution`
+  * null. Rep 1 carries JIT and first-scan warmup. A name that is unknown
+  * or fails writes `{"query": …, "error": …}` and the sweep goes on.
   */
 object Profile {
   val Usage = "usage: Profile <outDir> <query1,query2,...> <sfDir> [reps]"

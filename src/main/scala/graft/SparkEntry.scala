@@ -27,8 +27,33 @@ import graft.queries.{TimeSeries, Warehouse}
   */
 object SparkEntry {
 
+  /** Every table's declared schema, so a read runs no schema-inference
+    * job. The timestamps are parquet µs with isAdjustedToUTC=false, which
+    * Spark reads as TIMESTAMP_NTZ. `SchemaSpec` checks each against the
+    * schema Spark infers from the files. */
+  private[graft] val TableSchemas: Map[String, String] = Map(
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "documents" -> ("doc_id BIGINT, text STRING, lang STRING, " +
+      "source STRING, n_chars BIGINT"),
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, " +
+      "event_type STRING, value DOUBLE, props STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
+      "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
+      "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, " +
+      "p_type STRING, p_size INT, p_retailprice DOUBLE"),
+    "region" -> "r_regionkey INT, r_name STRING",
+    "supplier" -> ("s_suppkey BIGINT, s_name STRING, s_nationkey INT, " +
+      "s_acctbal DOUBLE"))
+
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.schema(TableSchemas(name)).parquet(s"$dir/$name.parquet")
 
   /** Epoch seconds (floor). Via TimestampType so TIMESTAMP_NTZ inputs
     * (parquet ms/us with isAdjustedToUTC=false) work too — the session TZ

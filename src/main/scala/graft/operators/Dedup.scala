@@ -209,33 +209,22 @@ object Dedup {
     * is an executor OOM (or, routed through a window count instead, a
     * one-task straggler sorting the whole hot bucket). Here bucket sizes
     * come from a plain `count` (map-side combined, skew-irrelevant) and
-    * hot rows die at the MAP side of the big shuffle via a broadcast
-    * anti-join — hot keys are few by definition (each needs > `maxSize`
-    * rows), with the [[applyComponentDedup]]-style `maxBroadcastHot`
-    * guard falling back to a shuffle join against adversarial inputs.
-    * `rows` is scanned twice (size pass + shuffle pass) — callers keep
-    * the projection cheap or persisted.
+    * hot rows leave through one anti-join on the bucket key. AQE picks
+    * its strategy at run time: an empty hot set removes the join, a
+    * small one is broadcast (hot rows die at the map side of the big
+    * shuffle), and a large one is sort-merged on the bucket key.
+    * Building the frame runs no job. `rows` is scanned twice (size pass + anti-join pass) —
+    * callers keep the projection cheap or persisted.
     *
     * Dropping a bucket entirely (not sampling it) is the same semantics
     * as the post-hoc filter, so oracles are unchanged. */
   private[graft] def dropHotBuckets(
-      rows: DataFrame, keyCols: Seq[String], maxSize: Long,
-      maxBroadcastHot: Long = 4096L): DataFrame = {
+      rows: DataFrame, keyCols: Seq[String], maxSize: Long): DataFrame = {
     val hot = rows.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("bucket_n"))
       .filter(col("bucket_n") > maxSize)
       .select(keyCols.map(col): _*)
-    // The count decides the join strategy AND short-circuits the common
-    // no-hot-keys case to a join-free plan. `hot` stays unpersisted: it
-    // is one map-side-combined aggregation over `rows` (cached by the
-    // caller), and a tiny result — recomputing it in the join branch is
-    // cheaper than managing another cache lifetime here.
-    hot.count() match {
-      case 0L => rows
-      case n if n <= maxBroadcastHot =>
-        rows.join(broadcast(hot), keyCols, "left_anti")
-      case _ => rows.join(hot, keyCols, "left_anti")
-    }
+    rows.join(hot, keyCols, "left_anti")
   }
 
   /** In-bucket candidate pairs WITHOUT a self-join — the one pair
@@ -852,22 +841,20 @@ object Dedup {
     * from its own id is removed; the min-id doc per component and docs
     * in no component survive untouched.
     *
-    * Scale shape: the anti-join side is only BROADCAST when the
-    * non-survivor count is at or below `maxBroadcastLosers` — unlike the
-    * query- or K-bounded broadcasts elsewhere in this library, the drop
-    * set scales with the corpus duplicate count (dedup's whole premise
-    * is that it can be large), so a web-scale corpus with a 30-50%
-    * duplicate rate takes the shuffle anti-join path instead of
-    * collecting hundreds of millions of ids to the driver. The count is
-    * cheap: connectedComponents' output is already materialized. */
+    * Scale shape: one unhinted anti-join against the non-survivor ids.
+    * Unlike the query- or K-bounded broadcasts elsewhere in this
+    * library, the drop set scales with the corpus duplicate count
+    * (dedup's whole premise is that it can be large), so AQE decides at
+    * run time: broadcast while the materialized label table is small, a
+    * shuffle anti-join for a web-scale corpus with a 30-50% duplicate
+    * rate instead of collecting hundreds of millions of ids to the
+    * driver. */
   def applyComponentDedup(df: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int = 64, maxBroadcastLosers: Long = 10_000_000L): DataFrame = {
+      maxIter: Int = 64): DataFrame = {
     val losers = connectedComponents(pairs, maxIter)
       .filter(col("id") =!= col("component"))
       .select(col("id").as(idCol))
-    val side =
-      if (losers.count() <= maxBroadcastLosers) broadcast(losers) else losers
-    df.join(side, Seq(idCol), "left_anti")
+    df.join(losers, Seq(idCol), "left_anti")
   }
 
   /** [[applyComponentDedup]] with PROVENANCE: each kept document carries
@@ -1141,7 +1128,7 @@ object Dedup {
   def winnowNearDupPairs(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 24, w: Int = 8, minShared: Long = 2L, threshold: Double = 0.5,
-      maxDocFreq: Long = 10000L, maxBroadcastHot: Long = 4096L): DataFrame = {
+      maxDocFreq: Long = 10000L): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession)
     // ONE kernel pass: per-doc fingerprint set as a row-local array
     // (winnow_grams ∘ window_min_distinct — no explode+window shuffle),
@@ -1164,7 +1151,7 @@ object Dedup {
       // ([[dropHotBuckets]]): a boilerplate fingerprint present in
       // millions of documents must never reach collect_list.
       bucketPairs(
-          dropHotBuckets(postings, Seq("fp"), maxDocFreq, maxBroadcastHot),
+          dropHotBuckets(postings, Seq("fp"), maxDocFreq),
           Seq("fp"), Seq("id", "set_size"))
         .groupBy(col("id_a"), col("id_b"),
           col("set_size_a").as("size_a"), col("set_size_b").as("size_b"))
@@ -1294,14 +1281,15 @@ object Dedup {
     * follows them.
     *
     * Scale shape — built around the corpus asymmetry (training corpora
-    * are ~10⁶× larger than benchmarks): the probe side's postings
-    * broadcast (guarded by `maxBroadcastProbe`, with a shuffle-join
-    * escape), so the TRAIN corpus is one map-side pass — shingle,
-    * explode, hash-probe — and the only shuffle carries the partially
-    * aggregated `(train_id, probe_id)` pair counts, never train
-    * postings. Both shingle arrays are distinct per document, so the
-    * join emits exactly one row per shared shingle and the pair count
-    * IS `|A ∩ B|` — no verification pass. Ubiquitous-shingle fan-out is
+    * are ~10⁶× larger than benchmarks): the shingle join carries no
+    * hint, and AQE broadcasts the small probe postings while they fit,
+    * so the TRAIN corpus is one map-side pass — shingle, explode,
+    * hash-probe — and the only shuffle carries the partially aggregated
+    * `(train_id, probe_id)` pair counts, never train postings; a probe
+    * corpus too large to broadcast shuffle-joins. Both shingle arrays
+    * are distinct per document, so the join emits exactly one row per
+    * shared shingle and the pair count IS `|A ∩ B|` — no verification
+    * pass. Ubiquitous-shingle fan-out is
     * map-side compute only (never shuffled); long default shingles keep
     * it negligible, exactly why decontamination uses 8/13-grams.
     *
@@ -1315,27 +1303,21 @@ object Dedup {
       train: DataFrame, trainId: String, trainText: String,
       probe: DataFrame, probeId: String, probeText: String,
       shingleWords: Int = 8, minShared: Long = 1L,
-      maxBroadcastProbe: Long = 1L << 22,
       normalize: Boolean = false): DataFrame = {
     // Register on BOTH sessions: under foreachBatch the micro-batch is a
     // CLONED session while the static probe side keeps the outer one,
-    // and the probe postings count() resolves kernels there.
+    // and the probe postings resolve their kernels there.
     graft.functions.GraftFunctions.register(train.sparkSession)
     graft.functions.GraftFunctions.register(probe.sparkSession)
     def text(c: String): Column =
       if (normalize) TextAnalysis.normalize(col(c)) else col(c)
-    val probePost0 = probe
+    val probePost = probe
       .select(col(probeId).cast(LongType).as("probe_id"),
         graft.functions.WordShingleFunctions
           .wordShingles(text(probeText), shingleWords).as("sh_arr"))
       .select(col("probe_id"),
         size(col("sh_arr")).cast(LongType).as("probe_size"),
         explode(col("sh_arr")).as("shingle"))
-    // One action on the SMALL side decides the join strategy (the same
-    // count-then-choose guard as [[dropHotBuckets]]).
-    val probePost =
-      if (probePost0.count() <= maxBroadcastProbe) broadcast(probePost0)
-      else probePost0
     train
       .select(col(trainId).cast(LongType).as("train_id"),
         explode(graft.functions.WordShingleFunctions
@@ -1402,9 +1384,9 @@ object Dedup {
   def blockedEntityPairs(df: DataFrame, idCol: String, nameCol: String,
       blockCols: Seq[String], maxDistance: Int = 2,
       maxBlock: Long = 1024L): DataFrame = {
-    // cached across dropHotBuckets' eager count, its anti-join branch,
-    // and BOTH self-join sides (the dropHotBuckets caller contract —
-    // the pairsFromBuckets pattern); released after the checkpoint
+    // cached across dropHotBuckets' size pass and BOTH self-join sides
+    // (the dropHotBuckets caller contract — the pairsFromBuckets
+    // pattern); released after the checkpoint
     val rows = df.select(
       (blockCols.map(col) :+ col(idCol).as("id") :+
         col(nameCol).as("name")): _*)

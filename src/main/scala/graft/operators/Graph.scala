@@ -478,14 +478,14 @@ object Graph {
     * self-join of the edge list on the middleman z, which explodes as
     * Σ deg(z)² — a hub z is quadratic. `maxDeg` is the STRUCTURAL
     * hub guard (the [[Dedup]] `dropHotBuckets` move): middlemen above
-    * it are dropped BEFORE the pair expansion (map-side, against the
-    * broadcast degree table), bounding the blowup at nodes·maxDeg² —
+    * it are dropped BEFORE the pair expansion (one join against the
+    * degree table), bounding the blowup at nodes·maxDeg² —
     * principled for AA specifically, because a hub's per-pair weight
     * `1/log(deg)` is the information-free tail the estimator already
     * discounts. Existing edges leave via one left-anti join; the
     * global top-k is TakeOrderedAndProject, never a full sort. */
   def adamicAdarTopK(edges: DataFrame, maxDeg: Long = 128L,
-      topK: Int = 20, maxBroadcastMids: Long = 1000000L): DataFrame = {
+      topK: Int = 20): DataFrame = {
     graft.functions.GraftFunctions.register(edges.sparkSession)
     import graft.functions.FixedLogFunctions.log2QuarterBits
     // The edge frame has FOUR consumers (degree rollup, both sides of
@@ -499,20 +499,17 @@ object Graph {
     val deg = e.groupBy(col("src").as("z"))
       .agg(count(lit(1)).as("deg"))
     // the middleman table is O(|V|): checkpoint it eagerly (ONE edges
-    // pass — the count below reads the materialized blocks, never
-    // re-deriving the edge list), then broadcast only under a row
-    // bound (the dropHotBuckets maxBroadcastHot rule) — at production
-    // node cardinality the hint would exceed broadcast/driver limits,
-    // so past the bound the join shuffles on z and AQE picks the
-    // strategy. The checkpoint stays alive inside the returned frame
-    // (the result depends on it — the mutualTopKAnchored convention).
-    val mids0 = deg.filter(col("deg") >= 2L && col("deg") <= maxDeg)
+    // pass, never re-deriving the edge list) and join it unhinted — AQE
+    // broadcasts it while it is small, and at production node
+    // cardinality, where a forced broadcast would exceed driver limits,
+    // the join shuffles on z. The checkpoint stays alive inside the
+    // returned frame (the result depends on it — the
+    // mutualTopKAnchored convention).
+    val mids = deg.filter(col("deg") >= 2L && col("deg") <= maxDeg)
       .withColumn("qb", log2QuarterBits(lit(1L), col("deg")))
       .withColumn("w_ppb", expr("4000000000L div qb"))
       .select(col("z"), col("w_ppb"))
       .localCheckpoint(true)
-    val mids = if (mids0.count() <= maxBroadcastMids) broadcast(mids0)
-    else mids0
     val ze = e.join(mids,
       col("src") === col("z")).select(col("z"), col("dst"), col("w_ppb"))
     val pairs = ze.as("l").join(ze.as("r"),
@@ -527,7 +524,7 @@ object Graph {
     Lifetime.seal(
       scored.orderBy(col("aa_ppb").desc, col("u"), col("v"))
         .limit(topK),
-      mids0)
+      mids)
     } finally e.unpersist()
   }
 
@@ -550,7 +547,7 @@ object Graph {
     * ~0 by construction). Closure check is one join against the edge
     * list on the (u, w) pair key; band rollup is map-combined. */
   def clusteringCoefficientBands(edges: DataFrame,
-      maxDeg: Long = 128L, maxBroadcastMids: Long = 1000000L): DataFrame = {
+      maxDeg: Long = 128L): DataFrame = {
     // same four-consumer shape as [[adamicAdarTopK]] — and the
     // co-purchase caller's derivation is a lineitem SELF-JOIN, the
     // single most expensive edge lineage in the registry: persist once,
@@ -559,13 +556,10 @@ object Graph {
     try {
     val deg = e.groupBy(col("src").as("z"))
       .agg(count(lit(1)).as("deg"))
-    // same O(|V|) broadcast bound as [[adamicAdarTopK]]: the apex
-    // table checkpoints eagerly (one edges pass; the count reads the
-    // blocks), hint only under the row cap, shuffle + AQE past it
-    val kept0 = deg.filter(col("deg") >= 2L && col("deg") <= maxDeg)
+    // the O(|V|) apex table, as in [[adamicAdarTopK]]: checkpointed
+    // eagerly (one edges pass), joined unhinted for AQE to size
+    val kept = deg.filter(col("deg") >= 2L && col("deg") <= maxDeg)
       .localCheckpoint(true)
-    val kept = if (kept0.count() <= maxBroadcastMids) broadcast(kept0)
-    else kept0
     val ze = e.join(kept, col("src") === col("z"))
       .select(col("z"), col("dst"), col("deg"))
     val wedges = ze.as("l").join(ze.as("r"),
@@ -588,7 +582,7 @@ object Graph {
           sum(col("n_closed")).as("closed_total"),
           sum(col("n_wedges")).as("wedge_total"))
         .orderBy(col("lcc_band")),
-      kept0)
+      kept)
     } finally e.unpersist()
   }
 

@@ -45,12 +45,27 @@ object Lifetime {
   /** Eagerly materialize `result` as its own local checkpoint, then
     * release every checkpoint in `intermediates` — they are dead once the
     * result holds its own blocks. Returns the sealed result (whose
-    * checkpoint the CALLER owns, per the contract above). */
+    * checkpoint the CALLER owns, per the contract above).
+    *
+    * The checkpoint's jobs carry the caller's `file:line` as their call
+    * site, so their stages (AQE's included, which otherwise name a
+    * `CompletableFuture` frame) say which operator line ran them. */
   def seal(result: DataFrame, intermediates: DataFrame*): DataFrame = {
-    val out = result.localCheckpoint(true)
+    val sc = result.sparkSession.sparkContext
+    val previous = sc.getLocalProperty(CallSiteShort)
+    new Throwable().getStackTrace
+      .find(!_.getClassName.startsWith(getClass.getName))
+      .foreach(f =>
+        sc.setCallSite(s"seal at ${f.getFileName}:${f.getLineNumber}"))
+    val out =
+      try result.localCheckpoint(true)
+      finally sc.setLocalProperty(CallSiteShort, previous)
     free(intermediates: _*)
     out
   }
+
+  /** The local property behind `SparkContext.setCallSite`. */
+  private val CallSiteShort = "callSite.short"
 
   /** Session-level hygiene for the caller-owned results above: unpersists
     * every persisted RDD of the session, blocking, and clears the SQL

@@ -1956,60 +1956,43 @@ object Similarity {
     * bounds WHICH `Q × rerank` vectors are ever read at full width, so
     * the expensive exact scoring touches a vanishing corpus fraction.
     *
-    * Scale shape: the shortlist is `Q × rerank` id pairs — broadcast
-    * (bounded by the query batch, never by the corpus) and semi-joined
-    * into ONE pruned corpus scan that re-reads only shortlisted vectors;
-    * query vectors broadcast; exact scores are the same dot_q12 integer
-    * kernel as [[bruteForceTopK]], so rerank ≡ brute force wherever the
-    * shortlist contains the true top-k. */
+    * Scale shape: the shortlist is `Q × rerank` id pairs (bounded by the
+    * query batch, never by the corpus) joined into ONE pruned corpus
+    * scan that re-reads only shortlisted vectors; exact scores are the
+    * same dot_q12 integer kernel as [[bruteForceTopK]], so rerank ≡
+    * brute force wherever the shortlist contains the true top-k. */
   def ivfPqTopKRerank(
       queries: DataFrame, queryId: String, queryVec: String,
       corpus: DataFrame, corpusId: String, corpusVec: String,
       k: Int, rerank: Int, numCentroids: Int = 16, refineRounds: Int = 1,
       nprobe: Int = 2, numSubspaces: Int = 4, numCodes: Int = 16,
-      residual: Boolean = true,
-      maxBroadcastQueries: Int = RerankBroadcastLimit): DataFrame = {
+      residual: Boolean = true): DataFrame = {
     require(rerank >= k, "rerank shortlist must be at least k")
     exactRerank(
       ivfPqTopK(queries, queryId, queryVec, corpus, corpusId, corpusVec,
         k = rerank, numCentroids, refineRounds, nprobe, numSubspaces,
         numCodes, residual),
-      queries, queryId, queryVec, corpus, corpusId, corpusVec, k,
-      maxBroadcastQueries)
+      queries, queryId, queryVec, corpus, corpusId, corpusVec, k)
   }
-
-  /** Broadcasting the rerank inputs is right while the query batch is
-    * small — the common serving shape, where the `Q × rerank` id list
-    * and the query-vector table are kilobytes. Above this many queries
-    * both grow linearly in |Q| and a forced broadcast would ship an
-    * unbounded table to every executor, so the rerank falls back to
-    * shuffle joins keyed on corpus_id / query_id (AQE may still demote
-    * to a runtime broadcast if stats allow — the point is to stop
-    * FORCING one regardless of size). */
-  private[graft] val RerankBroadcastLimit = 10000
 
   /** The rerank tail shared by the one-shot and persisted-index paths:
     * route the `Q × rerank` shortlist ids into one pruned corpus scan,
     * score the survivors with the exact dot_q12 kernel, cut to top-k.
-    * Join strategy per [[RerankBroadcastLimit]]: the query batch is
-    * sized with one early-exit `limit(n+1).count()` probe (bounded
-    * work even on an unbounded query table), then both rerank joins
-    * either broadcast (small batch) or shuffle on their keys. */
+    * Both joins are unhinted: both inputs grow linearly in |Q|, so AQE
+    * broadcasts them for a serving-sized query batch (kilobytes) and
+    * shuffles on corpus_id / query_id for a large one. */
   private def exactRerank(shortlist: DataFrame,
       queries: DataFrame, queryId: String, queryVec: String,
       corpus: DataFrame, corpusId: String, corpusVec: String,
-      k: Int, maxBroadcastQueries: Int = RerankBroadcastLimit): DataFrame = {
+      k: Int): DataFrame = {
     val ids = shortlist.select(col("query_id"), col("corpus_id"))
     val cq = corpus.select(col(corpusId).as("corpus_id"),
       V.quantize6(col(corpusVec)).as("cv"))
     val qq = queries.select(col(queryId).as("query_id"),
       V.quantize6(col(queryVec)).as("qv"))
-    val small = queries.select(col(queryId))
-      .limit(maxBroadcastQueries + 1).count() <= maxBroadcastQueries
-    val hint = (d: DataFrame) => if (small) broadcast(d) else d
     pqTopKWindow(
-      cq.join(hint(ids), Seq("corpus_id"))
-        .join(hint(qq), Seq("query_id"))
+      cq.join(ids, Seq("corpus_id"))
+        .join(qq, Seq("query_id"))
         .withColumn("score", V.dotQ12(col("qv"), col("cv"))), k)
   }
 
@@ -2215,14 +2198,12 @@ object Similarity {
   def probeIvfPqRerank(index: IvfPqIndex, queries: DataFrame,
       queryId: String, queryVec: String,
       corpus: DataFrame, corpusId: String, corpusVec: String,
-      k: Int, rerank: Int, nprobe: Int = 2,
-      maxBroadcastQueries: Int = RerankBroadcastLimit): DataFrame = {
+      k: Int, rerank: Int, nprobe: Int = 2): DataFrame = {
     require(rerank >= k, "rerank shortlist must be at least k")
     registered(corpus)
     exactRerank(
       probeIvfPq(index, queries, queryId, queryVec, k = rerank, nprobe),
-      queries, queryId, queryVec, corpus, corpusId, corpusVec, k,
-      maxBroadcastQueries)
+      queries, queryId, queryVec, corpus, corpusId, corpusVec, k)
   }
 
   /** Embedding-cosine near-duplicate pairs above `threshold`: LSH bucketing
@@ -2404,10 +2385,9 @@ object Similarity {
   private[graft] def hierarchicalCells(
       df: DataFrame, idCol: String, vecCol: String,
       numCentroids: Int, refineRounds: Int, maxCell: Int,
-      splitFanout: Int, maxDepth: Int,
-      maxBroadcastHot: Long = 4096L): DataFrame =
+      splitFanout: Int, maxDepth: Int): DataFrame =
     hierarchicalCellsTracked(df, idCol, vecCol, numCentroids, refineRounds,
-      maxCell, splitFanout, maxDepth, maxBroadcastHot)._1
+      maxCell, splitFanout, maxDepth)._1
 
   /** [[hierarchicalCells]] plus the per-level assignment checkpoints it
     * created. The returned frame reads those checkpoints lazily (each
@@ -2418,8 +2398,7 @@ object Similarity {
   private[graft] def hierarchicalCellsTracked(
       df: DataFrame, idCol: String, vecCol: String,
       numCentroids: Int, refineRounds: Int, maxCell: Int,
-      splitFanout: Int, maxDepth: Int,
-      maxBroadcastHot: Long = 4096L): (DataFrame, Seq[DataFrame]) = {
+      splitFanout: Int, maxDepth: Int): (DataFrame, Seq[DataFrame]) = {
     require(splitFanout >= 2, s"splitFanout must be >= 2, got $splitFanout")
     val levels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // `active` holds only rows whose leaf might still be over-full; rows
@@ -2441,12 +2420,10 @@ object Similarity {
     var overN = overKeys.count()
     while (overN > 0 && depth < maxDepth) {
       // Over-full keys are few relative to rows (each needs > maxCell
-      // members) but corpus-proportional in the worst case — same
-      // broadcast guard as [[Dedup.dropHotBuckets]].
-      val hot =
-        if (overN <= maxBroadcastHot) broadcast(overKeys) else overKeys
-      finished += active.join(hot, Seq("cell"), "left_anti")
-      val toSplit = active.join(hot, Seq("cell"), "left_semi")
+      // members) but corpus-proportional in the worst case: unhinted
+      // joins, sized by AQE as in [[Dedup.dropHotBuckets]].
+      finished += active.join(overKeys, Seq("cell"), "left_anti")
+      val toSplit = active.join(overKeys, Seq("cell"), "left_semi")
         .withColumn("hk", Dedup.md5_60(col("corpus_id").cast(StringType)))
       // Seeds: the splitFanout members with the smallest (md5_60(id), id)
       // per cell — a salted two-phase top-N so no single task sorts a

@@ -968,20 +968,18 @@ object TextAnalysis {
     * re-scan (without the seal, Catalyst re-plans the whole reference
     * pipeline under every subtree that uses it — 5+ scans of a slice
     * that can be TBs at corpus scale). Scoring is the doc-bigram stream
-    * left-joined to the (pair, context) cost tables — broadcast when
-    * the model fits (`maxBroadcastModel`, counted escape to shuffle
-    * joins otherwise; |pairCosts| = |pc|, so the count reads checkpoint
-    * block counts, not a recompute), then one groupBy(doc_id). The DOCUMENT
-    * corpus is scanned exactly once (explode_outer keeps zero-bigram
-    * docs in the same pass — no join-back). No driver-side state, no
+    * left-joined to the (pair, context) cost tables — unhinted, so AQE
+    * broadcasts a model that fits and shuffle-joins one that does not —
+    * then one groupBy(doc_id). The DOCUMENT corpus is scanned exactly
+    * once (explode_outer keeps zero-bigram docs in the same pass — no
+    * join-back). No driver-side state, no
     * transcendentals, no UDFs in the corpus-sized path. The
     * returned frame depends on the sealed cost tables — a session sweep
     * reclaims them (the per-operator contract in [[graft.operators.Lifetime]]). */
   def lmPerplexity(docs: DataFrame, idCol: String, textCol: String,
       ref: DataFrame, refTextCol: String,
-      alphaNum: Int = 1, alphaDen: Int = 10,
-      maxBroadcastModel: Long = 4_000_000L): DataFrame =
-    trainLm(ref, refTextCol, alphaNum, alphaDen, maxBroadcastModel)
+      alphaNum: Int = 1, alphaDen: Int = 10): DataFrame =
+    trainLm(ref, refTextCol, alphaNum, alphaDen)
       .score(docs, idCol, textCol)
 
   /** A trained (FROZEN) fixed-point bigram LM: checkpointed cost tables
@@ -1026,13 +1024,11 @@ object TextAnalysis {
     * so every table derived from them reads checkpointed blocks, never
     * the corpus (without the seal Catalyst re-plans the whole reference
     * pipeline under each subtree — 5+ scans of a slice that can be TBs).
-    * Cost tables stay lazy (model-sized recompute is free); the broadcast
-    * escape counts the pc checkpoint (|pairCosts| = |pc| — ctx is pc's
-    * own margin, the inner join preserves every row). The checkpoints
-    * live until a session sweep ([[Lifetime]] contract). */
+    * Cost tables stay lazy (model-sized recompute is free) and carry no
+    * join hint: AQE sizes them at run time. The checkpoints live until a
+    * session sweep ([[Lifetime]] contract). */
   def trainLm(ref: DataFrame, refTextCol: String,
       alphaNum: Int = 1, alphaDen: Int = 10,
-      maxBroadcastModel: Long = 4_000_000L,
       suffix: String = ""): LmModel = {
     require(alphaNum >= 1 && alphaDen >= 1,
       "lm scoring needs a positive rational α = alphaNum/alphaDen")
@@ -1065,11 +1061,7 @@ object TextAnalysis {
     val ctxCosts = ctx.crossJoin(broadcast(vrow))
       .select(col("w1"),
         log2QuarterBits(a, col("cctx") * s + a * v).as("ctx_cost" + suffix))
-    val (pairSide, ctxSide) =
-      if (pc.count() <= maxBroadcastModel)
-        (broadcast(pairCosts), broadcast(ctxCosts))
-      else (pairCosts, ctxCosts)
-    LmModel(pairSide, ctxSide, vrow, suffix, a, s)
+    LmModel(pairCosts, ctxCosts, vrow, suffix, a, s)
   }
 
   /** ONE corpus scan: explode_outer keeps zero-bigram documents as a
@@ -1107,18 +1099,16 @@ object TextAnalysis {
     * Scale shape: both models are built by [[lmModel]] (two bounded
     * scans each, checkpoint-sealed); the document corpus is scanned
     * ONCE — the same bigram stream is priced under both models in one
-    * pass (four broadcast joins with counted escapes), then one
-    * groupBy(doc_id). */
+    * pass (four unhinted cost-table joins), then one groupBy(doc_id). */
   def dsirImportance(docs: DataFrame, idCol: String, textCol: String,
       target: DataFrame, targetTextCol: String,
       background: DataFrame, bgTextCol: String,
-      alphaNum: Int = 1, alphaDen: Int = 10,
-      maxBroadcastModel: Long = 4_000_000L): DataFrame = {
+      alphaNum: Int = 1, alphaDen: Int = 10): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     val mt = trainLm(target, targetTextCol, alphaNum, alphaDen,
-      maxBroadcastModel, suffix = "_t")
+      suffix = "_t")
     val mb = trainLm(background, bgTextCol, alphaNum, alphaDen,
-      maxBroadcastModel, suffix = "_b")
+      suffix = "_b")
     docBigrams(docs, idCol, textCol)
       .transform(mt.costed)
       .transform(mb.costed)

@@ -213,18 +213,16 @@ class AdviceRegressionSpec extends SparkSpec {
     assert(rows.head.getAs[Long]("recall_ppm") == 1000000L, rows.head)
   }
 
-  test("adamicAdarTopK/clusteringCoefficientBands: the O(|V|) middleman " +
-      "broadcast is bounded — identical results past the row cap") {
+  test("adamicAdarTopK/clusteringCoefficientBands: no-broadcast arm, same rows") {
     import graft.operators.Graph
     val edges = Seq((1L, 2L), (2L, 1L), (1L, 3L), (3L, 1L), (2L, 3L),
         (3L, 2L), (3L, 4L), (4L, 3L), (4L, 1L), (1L, 4L))
       .toDF("src", "dst")
-    def strs(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
-    // cap 0 forces the shuffle path; results must be byte-identical
-    assert(strs(Graph.adamicAdarTopK(edges, maxBroadcastMids = 0L)) ==
+    def strs(df: => DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    // the shuffle arm of the middleman join must be byte-identical
+    assert(withoutBroadcast(strs(Graph.adamicAdarTopK(edges))) ==
       strs(Graph.adamicAdarTopK(edges)))
-    assert(strs(Graph.clusteringCoefficientBands(edges,
-        maxBroadcastMids = 0L)) ==
+    assert(withoutBroadcast(strs(Graph.clusteringCoefficientBands(edges))) ==
       strs(Graph.clusteringCoefficientBands(edges)))
   }
 

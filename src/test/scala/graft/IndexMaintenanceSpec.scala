@@ -255,13 +255,13 @@ class IndexMaintenanceSpec extends SparkSpec {
       threshold = 0.9, numCentroids = 2, refineRounds = 1, maxCell = 10,
       splitFanout = 4, maxDepth = 8)
     assert(rows(again) == rows(out))
-    // the non-broadcast hot-keys arm (over-full key set past
-    // maxBroadcastHot → plain anti/semi join) partitions identically
-    val unhinted = Similarity.hierarchicalCells(grouped, "vec_id",
-        "embedding", numCentroids = 2, refineRounds = 1, maxCell = 10,
-        splitFanout = 4, maxDepth = 8, maxBroadcastHot = 0L)
+    // the non-broadcast arm of the over-full-key anti/semi joins
+    // partitions identically
+    val unhinted = withoutBroadcast(Similarity.hierarchicalCells(grouped,
+        "vec_id", "embedding", numCentroids = 2, refineRounds = 1,
+        maxCell = 10, splitFanout = 4, maxDepth = 8)
       .select("corpus_id", "cell").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
+      .map(r => (r.getLong(0), r.getString(1))).toSet)
     val hinted = leaves.select("corpus_id", "cell").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(unhinted == hinted, "non-broadcast arm changed the leaf layout")

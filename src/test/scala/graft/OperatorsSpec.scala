@@ -897,27 +897,27 @@ class DedupSpec extends SparkSpec {
       eval_, "id", "text", shingleWords = 3, minShared = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(strict == Set((1L, 10L)))
-    // the probe side is the broadcast side — the train corpus never
-    // shuffles its postings
+    // the unhinted shingle join broadcasts at this size — no postings
+    // shuffle
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"probe postings should broadcast:\n$plan")
   }
 
-  test("crossCorpusContamination: shuffle escape past maxBroadcastProbe, same rows") {
+  test("crossCorpusContamination: shuffle join with broadcast disabled, same rows") {
     val train = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "completely different words here entirely")).toDF("id", "text")
     val eval_ = Seq((10L, "alpha beta gamma delta")).toDF("id", "text")
-    def rows(maxProbe: Long) = Dedup.crossCorpusContamination(
+    def rows() = Dedup.crossCorpusContamination(
         train, "id", "text", eval_, "id", "text",
-        shingleWords = 2, minShared = 1, maxBroadcastProbe = maxProbe)
+        shingleWords = 2, minShared = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).toSet
-    val hinted = rows(1L << 22)
-    val sharded = rows(0L) // every probe-postings count crosses 0
-    assert(hinted.nonEmpty && sharded == hinted,
-      s"shuffle arm diverged: $sharded vs $hinted")
+    val broadcastRows = rows()
+    val sharded = withoutBroadcast(rows())
+    assert(broadcastRows.nonEmpty && sharded == broadcastRows,
+      s"shuffle arm diverged: $sharded vs $broadcastRows")
   }
 
   test("dropHotBuckets: non-broadcast arm drops the same buckets") {
@@ -925,13 +925,50 @@ class DedupSpec extends SparkSpec {
     val rows = (1L to 50L).map(i => ("hot", i)) ++
       Seq(("cold", 1L), ("cold", 2L))
     val df = rows.toDF("bucket", "id")
-    def kept(maxBroadcastHot: Long): Set[(String, Long)] =
-      Dedup.dropHotBuckets(df, Seq("bucket"), maxSize = 10L,
-          maxBroadcastHot = maxBroadcastHot)
+    def kept(): Set[(String, Long)] =
+      Dedup.dropHotBuckets(df, Seq("bucket"), maxSize = 10L)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     val expected = Set(("cold", 1L), ("cold", 2L))
-    assert(kept(4096L) == expected)
-    assert(kept(0L) == expected, "non-broadcast anti-join arm diverged")
+    assert(kept() == expected)
+    assert(withoutBroadcast(kept()) == expected,
+      "non-broadcast anti-join arm diverged")
+  }
+
+  test("building dropHotBuckets and crossCorpusContamination runs no job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val rows = (1L to 40L).map(i => (if (i <= 30) "hot" else s"k$i", i))
+      .toDF("k", "id")
+    val train = Seq((1L, "alpha beta gamma delta")).toDF("id", "text")
+    val eval_ = Seq((10L, "alpha beta gamma")).toDF("id", "text")
+    // Jobs are told apart by a local property of this thread, so other
+    // work in the shared session is not counted; a marker job after the
+    // build drains the listener bus.
+    val sc = spark.sparkContext
+    val tag = "graft.spec.phase"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
+          .foreach(jobs.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "build")
+      Dedup.dropHotBuckets(rows, Seq("k"), maxSize = 10L)
+      Dedup.crossCorpusContamination(train, "id", "text",
+        eval_, "id", "text", shingleWords = 2)
+      sc.setLocalProperty(tag, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.contains("marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    assert(jobs.asScala.toSeq == Seq("marker"),
+      s"building ran jobs: ${jobs.asScala.mkString(",")}")
   }
 
   test("minhash: exact + near duplicates collide, unrelated do not") {
@@ -989,23 +1026,26 @@ class DedupSpec extends SparkSpec {
     val rows = (1L to 40L).map(i => (if (i <= 30) "hot" else s"k$i", i))
       .toDF("k", "id")
       .persist()
+    // the final adaptive plan, after an action has run it
+    def finalPlan(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.executedPlan.asInstanceOf[
+        org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec]
+        .executedPlan.toString
     try {
-      // no hot keys at a permissive cap → the SAME plan, no join inserted
+      // no hot keys at a permissive cap → AQE drops the join
       val cold = Dedup.dropHotBuckets(rows, Seq("k"), maxSize = 100L)
-      assert(!cold.queryExecution.executedPlan.toString.contains("Join"),
-        "no-hot-keys case must short-circuit to a join-free plan")
-      assert(cold.count() == 40L)
+      assert(cold.collect().length == 40)
+      assert(!finalPlan(cold).contains("Join"),
+        s"no-hot-keys case must run join-free:\n${finalPlan(cold)}")
       // one hot key → broadcast LEFT ANTI join, hot rows gone, rest intact
       val pruned = Dedup.dropHotBuckets(rows, Seq("k"), maxSize = 10L)
-      val plan = pruned.queryExecution.executedPlan.toString
-      assert(plan.contains("LeftAnti") && plan.contains("Broadcast"),
-        s"expected broadcast anti-join, got:\n$plan")
-      val kept = pruned.select("k").as[String].collect()
+      val kept = pruned.collect().map(_.getString(0))
       assert(kept.length == 10 && !kept.contains("hot"))
-      // adversarial fallback: hot-key set above the broadcast guard
-      val shuffled = Dedup.dropHotBuckets(rows, Seq("k"), maxSize = 0L,
-        maxBroadcastHot = 1L)
-      assert(shuffled.count() == 0L) // every key has >0 rows → all dropped
+      val plan = finalPlan(pruned)
+      assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
+        s"expected broadcast anti-join, got:\n$plan")
+      // every key has > 0 rows → all dropped
+      assert(Dedup.dropHotBuckets(rows, Seq("k"), maxSize = 0L).count() == 0L)
     } finally rows.unpersist()
   }
 

@@ -30,17 +30,25 @@ class ProfileSpec extends SparkSpec {
       p.contains("pair_combinations_struct")), plans.mkString("\n----\n"))
   }
 
+  private def stages = rep("q_dedup_minhash").get("stages").asScala.toSeq
+
   test("every stage with tasks names an execution the report lists") {
     val ids = executions.map(_.get("id").asLong()).toSet
-    val stages = rep("q_dedup_minhash").get("stages").asScala.toSeq
-      .filter(_.get("tasks").asInt() > 0)
-    // Parquet schema inference runs its one-task job when the table is
-    // read, outside any SQL execution: the only stage without one.
-    val (outside, inside) = stages.partition(_.get("execution").isNull)
-    assert(outside.forall(_.get("name").asText().startsWith("parquet at")),
-      outside.mkString("\n"))
-    assert(inside.nonEmpty)
-    inside.foreach(s => assert(ids(s.get("execution").asLong()), s.toString))
+    // tables are read with declared schemas: no inference job runs
+    // outside a SQL execution
+    assert(stages.nonEmpty && stages.forall(!_.get("execution").isNull),
+      stages.mkString("\n"))
+    stages.filter(_.get("tasks").asInt() > 0)
+      .foreach(s => assert(ids(s.get("execution").asLong()), s.toString))
+  }
+
+  test("the seal's stages name the operator line that sealed") {
+    val seal = executions.filter(_.get("action").asText() == "localCheckpoint")
+      .last.get("id").asLong()
+    val names = stages.filter(_.get("execution").asLong() == seal)
+      .map(_.get("name").asText())
+    assert(names.nonEmpty && names.forall(n => n.contains("Dedup.scala") &&
+      !n.contains("CompletableFuture.java")), names.mkString("\n"))
   }
 
   test("an unknown name writes an error entry and the sweep goes on") {

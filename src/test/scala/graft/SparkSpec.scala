@@ -10,6 +10,21 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String) = s"/root/testdata/sf0.001/$name.parquet"
 
+  /** Runs `body` with broadcast joins disabled, both at planning and in
+    * AQE's runtime re-planning, so every unhinted join shuffles. For
+    * checking that a join's shuffle arm returns the same rows. */
+  def withoutBroadcast[A](body: => A): A = {
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, "-1"))
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Runs `body`, then collects `keep` over the (action name, query
     * execution) of every query it finished, until `enough` holds or 30 s
     * pass — listener events arrive asynchronously. For asserting on a
