@@ -262,9 +262,14 @@ object Dedup {
     * bucket is quadratic however you generate pairs — standard LSH
     * practice is to skip, not explode, them; at 2000 ids a bucket already
     * means ~2M pairs in one task) — via [[dropHotBuckets]], so an
-    * over-full bucket never reaches the aggregation buffer either. The
-    * pair set is materialized eagerly (`localCheckpoint`) so the bucket
-    * projection's cache can be released before returning.
+    * over-full bucket never reaches the aggregation buffer either.
+    *
+    * Returns the LAZY pair frame plus the persisted bucket rows (the
+    * [[ngramPairCounts]] contract): the rows feed both the hot-bucket
+    * aggregate and the pair explode, and several callers' bucket
+    * projections run a corpus kernel (SimHash, phash decode, hyperplane
+    * hashing) that is cached nowhere else. The caller seals its verified
+    * result, then unpersists the rows.
     *
     * `keyCol` (one of `bucketCols`) is kept on the output — the sweep
     * form: several banding configurations share ONE bucket shuffle and
@@ -283,7 +288,7 @@ object Dedup {
   private[operators] def pairsFromBuckets(
       banded: DataFrame, idCol: String, bucketCols: Seq[String],
       maxBucket: Int = 2000, keyCol: Option[String] = None,
-      payloadCol: Option[String] = None): DataFrame = {
+      payloadCol: Option[String] = None): (DataFrame, DataFrame) = {
     val idType = banded.schema(idCol).dataType
     require(idType.isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"pairsFromBuckets requires a numeric id column (castable to LONG); " +
@@ -291,23 +296,21 @@ object Dedup {
     val rows = banded.select((bucketCols ++ (idCol +: payloadCol.toSeq))
         .map(col): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val kept = dropHotBuckets(rows, bucketCols, maxBucket.toLong)
-      // pinned width for the in-bucket pair explode (byte-sparse,
-      // compute-dense — the [[Par]] rule; collect_list has no map-side
-      // reduction so the moved exchange is byte-neutral). The payload
-      // form (SimHash, phash) keeps AQE's width, one reduce task at sf0.1
-      // local[4]: a pin to 4 took phash's median 1079 → 1307 ms.
-      val pinned =
-        if (payloadCol.isEmpty) Par.byKey(kept, bucketCols.map(col): _*)
-        else kept
-      bucketPairs(
-        pinned.select(bucketCols.map(col) ++ (col(idCol).cast(LongType)
-          .as("id") +: payloadCol.toSeq.map(col)): _*),
-        bucketCols, "id" +: payloadCol.toSeq, keyCol.toSeq)
-        .distinct() // a payload is functionally dependent on its id
-        .localCheckpoint(true)
-    } finally rows.unpersist()
+    val kept = dropHotBuckets(rows, bucketCols, maxBucket.toLong)
+    // pinned width for the in-bucket pair explode (byte-sparse,
+    // compute-dense — the [[Par]] rule; collect_list has no map-side
+    // reduction so the moved exchange is byte-neutral). The payload
+    // form (SimHash, phash) keeps AQE's width, one reduce task at sf0.1
+    // local[4]: a pin to 4 took phash's median 1079 → 1307 ms.
+    val pinned =
+      if (payloadCol.isEmpty) Par.byKey(kept, bucketCols.map(col): _*)
+      else kept
+    val pairs = bucketPairs(
+      pinned.select(bucketCols.map(col) ++ (col(idCol).cast(LongType)
+        .as("id") +: payloadCol.toSeq.map(col)): _*),
+      bucketCols, "id" +: payloadCol.toSeq, keyCol.toSeq)
+      .distinct() // a payload is functionally dependent on its id
+    (pairs, rows)
   }
 
   /** First 60 bits of MD5 as a long — the engine-portable hash primitive
@@ -415,7 +418,8 @@ object Dedup {
       bands: Int, rowsPerBand: Int, threshold: Double): DataFrame = {
     val k = bands * rowsPerBand
     val banded = bandedSignatures(sigs, idCol, bands, rowsPerBand)
-    val pairs = pairsFromBuckets(banded, idCol, Seq("band", "band_hash"))
+    val (pairs, rows) =
+      pairsFromBuckets(banded, idCol, Seq("band", "band_hash"))
     val result = pairs
       .join(sigs.select(col(idCol).as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
       .join(sigs.select(col(idCol).as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
@@ -424,13 +428,8 @@ object Dedup {
           .sigAgreement(col("sig_a"), col("sig_b")).cast(DoubleType) /
           lit(k.toDouble)).as("sig_similarity"))
       .filter(col("sig_similarity") >= threshold)
-    // Materialize the (small) pair set eagerly, then release the
-    // candidate-pair checkpoint — the candidates only fed this operator,
-    // and a dead localCheckpoint otherwise waits on GC + ContextCleaner
-    // to leave the block manager (the long-session leak a 100 TB driver
-    // cannot afford). The sealed result is the caller's to free
-    // ([[Lifetime.free]] or a session sweep).
-    Lifetime.seal(result, pairs)
+    // seal the small verified pair set; the bucket rows only fed it
+    try Lifetime.seal(result) finally rows.unpersist()
   }
 
   /** MINHASH-LSH QUALITY EVAL — precision/recall of the banded-minhash
@@ -497,10 +496,8 @@ object Dedup {
     val sigs = minhashSignatures(df, idCol, textCol, shingleWords, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // no persist needed: ngramJaccardPairs RETURNS an eagerly
-      // localCheckpointed frame, so the brute all-pairs pass runs
-      // exactly once however many consumers (truthC, hitC) read it —
-      // its blocks are released via the Lifetime.seal below
+      // ngramJaccardPairs returns a sealed frame: the all-pairs pass runs
+      // once for truthC and hitC, and the seal below frees it
       val truth = ngramJaccardPairs(df, idCol, textCol, shingleWords,
         threshold).select(col("id_a"), col("id_b"))
       // all configs in one banded frame; hashes computed AFTER the
@@ -519,8 +516,11 @@ object Dedup {
               .cast(IntegerType), col("rpb").cast(IntegerType)),
             _.cast(StringType))),
           lit("|"), col("band").cast(StringType))))
-      val pairs = pairsFromBuckets(banded, idCol,
+      // sealed: the join's inferred not-null filters, pushed below the
+      // distinct, keep the counts and the verification from sharing it
+      val (pairs0, rows) = pairsFromBuckets(banded, idCol,
         Seq("bands", "band", "band_hash"), maxBucket, keyCol = Some("bands"))
+      val pairs = try Lifetime.seal(pairs0) finally rows.unpersist()
       val simed = pairs
         .join(sigs.select(col(idCol).as("id_a"), col("sig").as("sig_a")),
           Seq("id_a"))
@@ -530,8 +530,8 @@ object Dedup {
           (graft.functions.MinHashFunctions
             .sigAgreement(col("sig_a"), col("sig_b")).cast(DoubleType) /
             lit(k.toDouble)).as("sig_similarity"))
+      // pred feeds predC and hitC: each reruns a join over sealed inputs
       val pred = simed.filter(col("sig_similarity") >= threshold)
-        .localCheckpoint(true)
       val cand = pairs.groupBy(col("bands"))
         .agg(count(lit(1)).as("n_candidates"))
       val predC = pred.groupBy(col("bands")).agg(count(lit(1)).as("n_pred"))
@@ -556,7 +556,7 @@ object Dedup {
         .withColumn("recall", when(col("n_truth") > 0,
           col("n_hit").cast(DoubleType) / col("n_truth")))
         .orderBy(col("bands"))
-      Lifetime.seal(result, pairs, truth, pred)
+      Lifetime.seal(result, pairs, truth)
     } finally sigs.unpersist()
   }
 
@@ -672,16 +672,15 @@ object Dedup {
         explode(sequence(lit(0), lit(3))).as("chunk"))
       .withColumn("chunk_val",
         expr("shiftright(simhash, CAST(chunk * 15 AS INT)) & 32767"))
-    val pairs = pairsFromBuckets(chunked, idCol, Seq("chunk", "chunk_val"),
-      payloadCol = Some("simhash"))
-    // Seal the verified (small) pair set and free the candidate
-    // checkpoint — same storage-lifetime contract as the minhash family.
-    Lifetime.seal(
+    val (pairs, rows) = pairsFromBuckets(chunked, idCol,
+      Seq("chunk", "chunk_val"), payloadCol = Some("simhash"))
+    // the minhash family's contract: seal, then release the bucket rows
+    try Lifetime.seal(
       pairs.select(col("id_a"), col("id_b"),
           bit_count(col("simhash_a").bitwiseXOR(col("simhash_b")))
             .cast(LongType).as("hamming"))
-        .filter(col("hamming") <= maxHamming),
-      pairs)
+        .filter(col("hamming") <= maxHamming))
+    finally rows.unpersist()
   }
 
   /** Collapse near-duplicate PAIRS into clusters: connected components
@@ -753,22 +752,11 @@ object Dedup {
     // direct every edge large→small (u > v), drop self-loops
     val a = col("id_a")
     val b = col("id_b")
+    // the loop's seed: lazy over the caller's pairs
     var edges = pairs.filter(a =!= b)
       .select(greatest(a, b).cast(LongType).as("u"),
         least(a, b).cast(LongType).as("v"))
       .distinct()
-      .localCheckpoint(true)
-    if (edges.isEmpty)
-      return (edges.select(col("u").as("id"), col("v").as("component")), 0)
-
-    def finishLocal(e: DataFrame, rounds: Int): (DataFrame, Int) = {
-      val spark = e.sparkSession
-      import spark.implicits._
-      val labels = unionFindLocal(
-        e.collect().map(r => (r.getLong(0), r.getLong(1))))
-      Lifetime.free(e) // collected — the edge checkpoint is dead
-      (labels.toSeq.toDF("id", "component"), rounds)
-    }
 
     // large-star: each node u hooks its LARGER neighbors v > u onto
     // m = min(N(u) ∪ {u}) — long chains halve instead of shrinking by one
@@ -795,22 +783,18 @@ object Dedup {
     var rounds = 0
     var converged = false
     var count = edges.count()
-    if (count <= localEdgeThreshold) return finishLocal(edges, 0)
-    while (rounds < maxIter && !converged) {
-      val updated = smallStar(largeStar(edges)).localCheckpoint(true)
+    // the fixpoint test reads `edges` after the next round is sealed, so
+    // each seal frees the round before `edges`; an edge set small enough
+    // for the driver leaves the loop for the local union-find below
+    var stale = Seq.empty[DataFrame]
+    while (count > localEdgeThreshold && rounds < maxIter && !converged) {
+      val updated = Lifetime.seal(smallStar(largeStar(edges)), stale: _*)
       val n = updated.count()
-      if (n <= localEdgeThreshold) {
-        Lifetime.free(edges) // superseded by `updated`
-        return finishLocal(updated, rounds + 1)
-      }
       // exact fixpoint test on the (small) edge set: same cardinality and
       // no edge outside the previous set
       converged = n == count && updated.join(edges, Seq("u", "v"),
         "left_anti").isEmpty
-      // the previous round's checkpoint is dead the moment the fixpoint
-      // test has read it — free it NOW, not at GC: an O(log n) round loop
-      // otherwise parks every round's edge set in the block manager
-      Lifetime.free(edges)
+      stale = Seq(edges)
       count = n
       edges = updated
       rounds += 1
@@ -821,18 +805,25 @@ object Dedup {
     // maxIter's default (64 ≳ 2·log₂(2⁶³)) makes exhaustion effectively
     // impossible for a converging run; if a caller lowers it, fail loudly
     // rather than return malformed labels.
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter star rounds " +
-        s"($count edges remain); raise maxIter")
-    // at the fixpoint the edge set is a star forest: (node, component
-    // min) for every non-root node; roots label themselves. Seal the
-    // label table (≈ the node set — same order as the final edge set) and
-    // free the final edge checkpoint: the caller owns exactly ONE
-    // materialized result, not the loop's internals.
-    val labels = edges.select(col("u").as("id"), col("v").as("component"))
-      .union(edges.select(col("v").as("id"), col("v").as("component"))
-        .distinct())
-    (Lifetime.seal(labels, edges), rounds)
+    val labels =
+      if (converged)
+        // at the fixpoint the edge set is a star forest: (node, component
+        // min) for every non-root node; roots label themselves
+        edges.select(col("u").as("id"), col("v").as("component"))
+          .union(edges.select(col("v").as("id"), col("v").as("component"))
+            .distinct())
+      else if (count <= localEdgeThreshold) {
+        val spark = edges.sparkSession
+        import spark.implicits._
+        unionFindLocal(edges.collect().map(r => (r.getLong(0), r.getLong(1))))
+          .toSeq.toDF("id", "component")
+      } else throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIter star rounds " +
+          s"($count edges remain); raise maxIter")
+    // the caller owns ONE sealed result, not the loop's edge sets; with
+    // no round run nothing is sealed and the labels are local
+    (if (rounds == 0) labels
+     else Lifetime.seal(labels, (stale :+ edges): _*), rounds)
   }
 
   /** Apply the near-dup DECISION to the corpus — the last mile of the
@@ -867,8 +858,8 @@ object Dedup {
     * still scanned once. */
   def applyComponentDedupWithStats(df: DataFrame, idCol: String,
       pairs: DataFrame, maxIter: Int = 64): DataFrame = {
+    // sealed (or local) by connectedComponents: both branches re-read it
     val labels = connectedComponents(pairs, maxIter)
-      .localCheckpoint(true) // feeds two branches; tiny (ids in pairs)
     val sizes = labels.groupBy(col("component"))
       .agg(count(lit(1)).as("cluster_size"))
     val kept = labels.filter(col("id") === col("component"))
@@ -885,8 +876,7 @@ object Dedup {
       .withColumn("cluster_size", coalesce(col("cluster_size"), lit(1L)))
       .withColumn("n_removed", col("cluster_size") - 1L)
       .drop("__kid")
-    // seal + free: the label checkpoint must not outlive the operator
-    // (the long-session block-manager leak this file's siblings document)
+    // the label checkpoint must not outlive the operator
     Lifetime.seal(result, labels)
   }
 
@@ -1063,18 +1053,17 @@ object Dedup {
         coldPairs(postings.join(hotJ.select(col("h")), Seq("h"), "left_anti"))
           .unionAll(salted)
     }
-    // Candidate pairs are small; materialize them eagerly — they feed
-    // both the candidate-id set and the final join (a lazy diamond would
-    // re-run the pairing stages per consumer).
+    // Sealed: the candidate-id set and the final join each push their own
+    // inferred not-null filter below the distinct, so lazy candidates run
+    // the pairing stages per consumer (salted query, sf0.1: 9.2 → 17.4 s).
     val ubound = least(col("pos_a"), col("pos_b")) +
       least(col("set_size_a") - col("pos_a"), col("set_size_b") - col("pos_b"))
-    val cand = pairStructs
+    val cand = Lifetime.seal(pairStructs
       .filter(col("set_size_b") >= tDec * col("set_size_a") &&
         col("set_size_a") >= tDec * col("set_size_b"))
       .filter(ubound >= tDec * (col("set_size_a") + col("set_size_b") - ubound))
       .select(col("id_a"), col("id_b"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     // Exact verification: full shingle sets ONLY for candidate ids
     // (semi-join on the small candidate id set).
     val candIds = cand.select(col("id_a").as("id"))
@@ -1150,7 +1139,7 @@ object Dedup {
       // Hot-fingerprint pre-filter BEFORE bucket materialization
       // ([[dropHotBuckets]]): a boilerplate fingerprint present in
       // millions of documents must never reach collect_list.
-      bucketPairs(
+      Lifetime.seal(bucketPairs(
           dropHotBuckets(postings, Seq("fp"), maxDocFreq),
           Seq("fp"), Seq("id", "set_size"))
         .groupBy(col("id_a"), col("id_b"),
@@ -1161,8 +1150,7 @@ object Dedup {
           col("n_common").cast(DoubleType) /
             (col("size_a") + col("size_b") - col("n_common")).cast(DoubleType))
         .filter(col("jaccard_fp") >= threshold)
-        .select("id_a", "id_b", "n_common", "jaccard_fp")
-        .localCheckpoint(true)
+        .select("id_a", "id_b", "n_common", "jaccard_fp"))
     } finally postings.unpersist()
   }
 
@@ -1181,15 +1169,13 @@ object Dedup {
       maxDocFreq: Long = 10000L): DataFrame = {
     val (pairs, sh) = ngramPairCounts(df, idCol, textCol, shingleWords,
       maxDocFreq)
-    try {
-      pairs
-        .withColumn("jaccard",
-          col("n_common").cast(DoubleType) /
-            (col("size_a") + col("size_b") - col("n_common")).cast(DoubleType))
-        .filter(col("jaccard") >= threshold)
-        .select("id_a", "id_b", "n_common", "jaccard")
-        .localCheckpoint(true)
-    } finally sh.unpersist()
+    try Lifetime.seal(pairs
+      .withColumn("jaccard",
+        col("n_common").cast(DoubleType) /
+          (col("size_a") + col("size_b") - col("n_common")).cast(DoubleType))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "n_common", "jaccard"))
+    finally sh.unpersist()
   }
 
   /** Shared postings→pair-intersection chain for the exact n-gram pair
@@ -1251,9 +1237,8 @@ object Dedup {
       maxDocFreq: Long = 10000L): DataFrame = {
     val (pairs, sh) = ngramPairCounts(df, idCol, textCol, shingleWords,
       maxDocFreq)
-    try {
-      val aIsSmall = col("size_a") < col("size_b")
-      pairs
+    val aIsSmall = col("size_a") < col("size_b")
+    try Lifetime.seal(pairs
         .withColumn("containment",
           col("n_common").cast(DoubleType) /
             least(col("size_a"), col("size_b")).cast(DoubleType))
@@ -1263,9 +1248,8 @@ object Dedup {
             .as("contained_id"),
           when(aIsSmall, col("id_b")).otherwise(col("id_a"))
             .as("container_id"),
-          col("n_common"), col("containment"))
-        .localCheckpoint(true)
-    } finally sh.unpersist()
+          col("n_common"), col("containment")))
+    finally sh.unpersist()
   }
 
   /** Cross-corpus contamination — the DECONTAMINATION primitive: which
@@ -1375,18 +1359,20 @@ object Dedup {
     * Exactness: `levenshtein` is an integer both engines define
     * identically; no floats anywhere.
     *
-    * Scale shape: the in-block self-join is quadratic per block, so
-    * blocks above `maxBlock` rows are dropped structurally BEFORE the
-    * pair expansion ([[dropHotBuckets]] — the dedup family's hot-key
-    * move; an over-broad block is a blocking-key design smell, not a
-    * workload). Work is then bounded by |blocks|·maxBlock²; the block
-    * join shuffles both sides on the block key only. */
+    * Scale shape: in-block pairing is quadratic per block, so blocks
+    * above `maxBlock` rows are dropped structurally BEFORE the pair
+    * expansion ([[dropHotBuckets]] — the dedup family's hot-key move; an
+    * over-broad block is a blocking-key design smell, not a workload).
+    * Work is then bounded by |blocks|·maxBlock². Pairs come from
+    * [[bucketPairs]], not a self-join: a self-join plans the hot-key
+    * aggregate and the row scan once per side (exchange reuse does not
+    * rescue aliased branches), while one shuffle on the block key, pinned
+    * to the session width, feeds the in-block explode directly. */
   def blockedEntityPairs(df: DataFrame, idCol: String, nameCol: String,
       blockCols: Seq[String], maxDistance: Int = 2,
       maxBlock: Long = 1024L): DataFrame = {
-    // cached across dropHotBuckets' size pass and BOTH self-join sides
-    // (the dropHotBuckets caller contract — the pairsFromBuckets
-    // pattern); released after the checkpoint
+    // cached across dropHotBuckets' size pass and the pair explode (the
+    // pairsFromBuckets pattern); released after the seal
     val rows = df.select(
       (blockCols.map(col) :+ col(idCol).as("id") :+
         col(nameCol).as("name")): _*)
@@ -1394,26 +1380,16 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val kept = dropHotBuckets(rows, blockCols, maxBlock)
-      val l = kept.select(
-        (blockCols.map(col) :+ col("id").as("id_a") :+
-          col("name").as("name_a")): _*)
-      val r = kept.select(
-        (blockCols.map(col) :+ col("id").as("id_b") :+
-          col("name").as("name_b")): _*)
       // Two sound pre-prunes before the full DP: the THRESHOLDED
       // levenshtein runs the banded O(min(m,n)·d) DP (returns -1 past
       // the threshold — measured 1.7× the full-table form on the
       // customer workload), and |len(a)−len(b)| ≤ d — a lower bound on
       // edit distance — short-circuits even that as the `when` guard of
-      // the SAME projection. The guard must stay fused in the
-      // projection: expressed as a separate `.filter` it is pushed into
-      // the sort-merge join CONDITION, where it is re-evaluated per
-      // key-matched candidate (pre id-ordering) and measured 3×
-      // SLOWER than the DP it was saving. Both prunes are exact —
-      // survivors and distances are identical to the full-DP form
-      // (locked by the unchanged DuckDB oracle, which still
-      // brute-forces the full distance).
-      l.join(r, blockCols)
+      // the SAME projection (as a separate `.filter` it measured 3×
+      // slower, pushed into a self-join's condition). Both prunes are
+      // exact — the DuckDB oracle still brute-forces the full distance.
+      Lifetime.seal(bucketPairs(Par.byKey(kept, blockCols.map(col): _*),
+          blockCols, Seq("id", "name"))
         .filter(col("id_a") < col("id_b"))
         .withColumn("distance",
           when(abs(length(col("name_a")) - length(col("name_b")))
@@ -1424,8 +1400,7 @@ object Dedup {
         .filter(col("distance") >= 0)
         .select(col("id_a"), col("id_b"), col("name_a"), col("name_b"),
           col("distance"))
-        .orderBy(col("distance"), col("id_a"), col("id_b"))
-        .localCheckpoint(true)
+        .orderBy(col("distance"), col("id_a"), col("id_b")))
     } finally rows.unpersist()
   }
 }

@@ -463,7 +463,6 @@ object Embeddings {
     // reverse of the brute form's corpus broadcast, which is the point
     val anchors = graft.operators.Similarity
       .anchorSample(q, "vid", anchorBudget)
-      .localCheckpoint(true)
     val corpus = q.select(col("vid").as("ovid"), col("qv").as("ov"),
         col("nn").as("onn"))
       // few-split corpora: spread the O(budget·n·d) kernel across

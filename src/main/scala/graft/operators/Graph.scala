@@ -106,10 +106,16 @@ object Graph {
           (lit((15 * S / 100) / nN) +
             expr("(85 * inc) div 100")).as("rank_ppb"))
     }
-    try rank.orderBy(col("rank_ppb").desc, col("node")).limit(topK)
-      .localCheckpoint(true)
-    finally cached.foreach(_.unpersist())
+    sealTop(rank, topK, cached.toSeq)
   }
+
+  /** The `topK` ranks by `rank_ppb` (ties by node), sealed; then the
+    * iteration's caches are released. */
+  private def sealTop(rank: DataFrame, topK: Int,
+      cached: Seq[DataFrame]): DataFrame =
+    try Lifetime.seal(rank.orderBy(col("rank_ppb").desc, col("node"))
+      .limit(topK))
+    finally cached.foreach(_.unpersist())
 
   /** PERSONALIZED PageRank: random walks restart at `seeds` instead of
     * everywhere, so rank mass concentrates in the seeds' neighborhood —
@@ -190,9 +196,7 @@ object Graph {
           (expr("(15 * base) div 100") +
             expr("(85 * inc) div 100")).as("rank_ppb"))
     }
-    try rank.orderBy(col("rank_ppb").desc, col("node")).limit(topK)
-      .localCheckpoint(true)
-    finally cached.foreach(_.unpersist())
+    sealTop(rank, topK, cached.toSeq)
   }
 
   /** HITS hubs & authorities over a DIRECTED edge list — the
@@ -229,9 +233,8 @@ object Graph {
     // the LOGICAL plan doubles per half-round — a persist()-only fix
     // still hands Catalyst an exponentially-growing tree to analyze
     // (measured: 21 s at sf0.001 AND sf0.1 — pure driver-side planning
-    // cost). localCheckpoint truncates the lineage each half-round:
-    // plan size stays constant in T, and the checkpointed raw is the
-    // shared input of both consumers.
+    // cost). Sealing each half-round's raw keeps the plan constant in T
+    // and frees the raw two half-rounds back, now read by nothing.
     val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def mat(df: DataFrame): DataFrame = {
       val p = df.persist(); cached += p; p
@@ -247,8 +250,10 @@ object Graph {
         col("dst").cast(LongType).as("dst")), col("src"))
       .dropDuplicates("src", "dst"))
     val eByDst = mat(Par.byKey(eBySrc, col("dst")))
+    var raws = Vector.empty[DataFrame]
     def normalized(raw0: DataFrame): DataFrame = {
-      val raw = raw0.localCheckpoint(true)
+      val raw = Lifetime.seal(raw0, raws.dropRight(1): _*)
+      raws = raws.takeRight(1) :+ raw
       val nrm = raw.agg(
         greatest(expr(s"sum(raw) div $S"), lit(1L)).as("nrm"))
       raw.crossJoin(broadcast(nrm))
@@ -270,8 +275,8 @@ object Graph {
     def top(df: DataFrame, side: String) =
       df.select(lit(side).as("side"), col("node"), col("score_ppb"))
         .orderBy(col("score_ppb").desc, col("node")).limit(topK)
-    try top(auth, "authority").unionAll(top(hub, "hub"))
-      .localCheckpoint(true)
+    try Lifetime.seal(top(auth, "authority").unionAll(top(hub, "hub")),
+      raws: _*)
     finally cached.foreach(_.unpersist())
   }
 
@@ -296,8 +301,8 @@ object Graph {
     * edges by src for the src-side semi-join and the degree count —
     * the classic distributed peel, O(rounds) passes, never materializing
     * neighborhoods. Like [[hitsTop]], the alive frame feeds the next
-    * round twice (filter + joins), so each round localCheckpoints to
-    * keep the logical plan constant-size in `rounds`. */
+    * round twice (filter + joins), so each round seals it to keep the
+    * logical plan constant-size in `rounds`. */
   def kCoreSurvivors(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, s"k=$k, rounds=$rounds")
     val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -317,13 +322,18 @@ object Graph {
         .join(alive.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("degree"))
-    var alive = eByDst.select(col("src").as("node")).distinct()
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds)
-      alive = degreeAmong(alive).filter(col("degree") >= k)
-        .select("node").localCheckpoint(true)
-    try degreeAmong(alive).localCheckpoint(true)
-    finally cached.foreach(_.unpersist())
+    // The seed is sealed: as the first job over the cold edge cache it
+    // builds it once (a plan with several branches builds it per branch).
+    // Round r seals the degrees among the nodes of degree ≥ k in round
+    // r−1's table; the last table is the result.
+    val seed = Lifetime.seal(eByDst.select(col("src").as("node")).distinct())
+    var degrees = degreeAmong(seed)
+    try {
+      for (_ <- 1 to rounds)
+        degrees = Lifetime.seal(degreeAmong(
+          degrees.filter(col("degree") >= k).select("node")), degrees, seed)
+      degrees
+    } finally cached.foreach(_.unpersist())
   }
 
   /** BFS LAYER PROFILE — how far does the graph reach from a seed?
@@ -350,28 +360,25 @@ object Graph {
     // predated the codegen-cache fix that was masking task-side cost.)
     // Each hop's frontier is node-sized and feeds THREE consumers
     // (the union chain, the next join, every later anti-join), so it
-    // localCheckpoints — the [[hitsTop]] constant-plan lesson; the
-    // final 1-row-per-hop aggregate is eager so the persist can be
-    // dropped before returning.
+    // is sealed — the [[hitsTop]] constant-plan lesson; the union chain
+    // reads every frontier, so the final 1-row-per-hop seal frees them.
     val e = edges.select(col("src"), col("dst")).persist()
     try {
       var visited = Seq((seed, 0L)).toDF("node", "hop")
-      var frontier = visited.select(col("node"))
+      var frontiers = Vector(visited.select(col("node")))
       for (k <- 1 to maxHops) {
-        val next = e
-          .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
+        val next = Lifetime.seal(e
+          .join(frontiers.last.withColumnRenamed("node", "src"), Seq("src"))
           .select(col("dst").as("node")).distinct()
-          .join(visited.select("node"), Seq("node"), "left_anti")
-          .localCheckpoint(true)
+          .join(visited.select("node"), Seq("node"), "left_anti"))
         visited = visited
           .unionAll(next.withColumn("hop", lit(k.toLong)))
-        frontier = next
+        frontiers :+= next
       }
-      visited.groupBy(col("hop"))
+      Lifetime.seal(visited.groupBy(col("hop"))
         .agg(count(lit(1)).as("n_nodes"),
           min(col("node")).as("min_node"),
-          max(col("node")).as("max_node"))
-        .localCheckpoint(true)
+          max(col("node")).as("max_node")), frontiers: _*)
     } finally e.unpersist()
   }
 
@@ -489,27 +496,18 @@ object Graph {
     graft.functions.GraftFunctions.register(edges.sparkSession)
     import graft.functions.FixedLogFunctions.log2QuarterBits
     // The edge frame has FOUR consumers (degree rollup, both sides of
-    // the wedge self-join, the existing-edge anti-join) — without a
-    // persist each replays the caller's full derivation lineage
-    // (r13 stage table: 2× 3-task derivation scans + 3 duplicate
-    // distinct exchanges per execution). Persist once, seal the final
-    // top-k eagerly, release everything before returning.
-    val e = edges.select(col("src"), col("dst")).persist()
-    try {
+    // the wedge self-join, the existing-edge anti-join): lazy, each replays
+    // the caller's derivation, and a lazy cache is built once per branch
+    // when AQE submits them together. Sealed first, freed by the top-k.
+    val e = Lifetime.seal(edges.select(col("src"), col("dst")))
     val deg = e.groupBy(col("src").as("z"))
       .agg(count(lit(1)).as("deg"))
-    // the middleman table is O(|V|): checkpoint it eagerly (ONE edges
-    // pass, never re-deriving the edge list) and join it unhinted — AQE
-    // broadcasts it while it is small, and at production node
-    // cardinality, where a forced broadcast would exceed driver limits,
-    // the join shuffles on z. The checkpoint stays alive inside the
-    // returned frame (the result depends on it — the
-    // mutualTopKAnchored convention).
+    // the O(|V|) middleman table, joined unhinted: AQE broadcasts it while
+    // small and shuffles on z at production node cardinality
     val mids = deg.filter(col("deg") >= 2L && col("deg") <= maxDeg)
       .withColumn("qb", log2QuarterBits(lit(1L), col("deg")))
       .withColumn("w_ppb", expr("4000000000L div qb"))
       .select(col("z"), col("w_ppb"))
-      .localCheckpoint(true)
     val ze = e.join(mids,
       col("src") === col("z")).select(col("z"), col("dst"), col("w_ppb"))
     val pairs = ze.as("l").join(ze.as("r"),
@@ -523,9 +521,7 @@ object Graph {
         Seq("u", "v"), "left_anti")
     Lifetime.seal(
       scored.orderBy(col("aa_ppb").desc, col("u"), col("v"))
-        .limit(topK),
-      mids)
-    } finally e.unpersist()
+        .limit(topK), e)
   }
 
   /** LOCAL CLUSTERING COEFFICIENT CENSUS — how cliquish is each node's
@@ -550,16 +546,13 @@ object Graph {
       maxDeg: Long = 128L): DataFrame = {
     // same four-consumer shape as [[adamicAdarTopK]] — and the
     // co-purchase caller's derivation is a lineitem SELF-JOIN, the
-    // single most expensive edge lineage in the registry: persist once,
-    // seal eagerly (r13)
-    val e = edges.select(col("src"), col("dst")).persist()
-    try {
+    // single most expensive edge lineage in the registry: seal it once
+    val e = Lifetime.seal(edges.select(col("src"), col("dst")))
     val deg = e.groupBy(col("src").as("z"))
       .agg(count(lit(1)).as("deg"))
-    // the O(|V|) apex table, as in [[adamicAdarTopK]]: checkpointed
-    // eagerly (one edges pass), joined unhinted for AQE to size
+    // the O(|V|) apex table, as in [[adamicAdarTopK]]: one aggregate
+    // over the sealed edges, joined unhinted for AQE to size
     val kept = deg.filter(col("deg") >= 2L && col("deg") <= maxDeg)
-      .localCheckpoint(true)
     val ze = e.join(kept, col("src") === col("z"))
       .select(col("z"), col("dst"), col("deg"))
     val wedges = ze.as("l").join(ze.as("r"),
@@ -581,9 +574,7 @@ object Graph {
         .agg(count(lit(1)).as("n_nodes"),
           sum(col("n_closed")).as("closed_total"),
           sum(col("n_wedges")).as("wedge_total"))
-        .orderBy(col("lcc_band")),
-      kept)
-    } finally e.unpersist()
+        .orderBy(col("lcc_band")), e)
   }
 
   def labelPropagationCommunities(edges: DataFrame, iterations: Int = 3,
@@ -608,24 +599,21 @@ object Graph {
       // per-node argmax: highest count, then smallest label — the
       // window (not max_by-over-struct) keeps the tie rule explicit and
       // mirrors the oracle's row_number exactly
-      labels = counted
+      labels = Lifetime.seal(counted
         .withColumn("rn", row_number().over(Window.partitionBy(col("node"))
           .orderBy(col("c").desc, col("lab"))))
         .filter(col("rn") === 1)
-        .select(col("node"), col("lab"))
-        .localCheckpoint(true)
+        .select(col("node"), col("lab")), labels)
     }
-    // the census feeds the top-k AND the one-row total — checkpoint it
-    // rather than single-partitioning a (potentially node-sized) frame
-    // under a global window
+    // the census feeds the top-k AND the one-row total, rather than
+    // single-partitioning a node-sized frame under a global window
     val census = labels.groupBy(col("lab").as("community"))
       .agg(count(lit(1)).as("n_nodes"))
-      .localCheckpoint(true)
     val total = census.agg(count(lit(1)).as("n_communities"))
     val result = census.crossJoin(broadcast(total))
       .orderBy(col("n_nodes").desc, col("community")).limit(topK)
       .select(col("community"), col("n_nodes"), col("n_communities"))
-    try Lifetime.seal(result, census)
+    try Lifetime.seal(result, labels)
     finally cached.foreach(_.unpersist())
   }
 }

@@ -1,51 +1,59 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Storage-lifetime control for eagerly-materialized (`localCheckpoint`)
-  * intermediate results.
+/** The one eager primitive of the operators: [[seal]] materializes a frame
+  * as a local checkpoint, names the jobs that compute it and releases the
+  * checkpoints it supersedes. No other code calls `localCheckpoint`.
   *
-  * Why this exists: several operators in this library materialize small
-  * intermediates eagerly — candidate pair sets, per-round edge sets,
-  * quantized side tables — so a cached upstream can be released before
-  * returning, or so an iterative plan's lineage stays flat. A local
-  * checkpoint's blocks, however, are only reclaimed when the GC finalizes
-  * the backing RDD and the async `ContextCleaner` notices; in a
-  * long-lived session (the 100 TB target is exactly that: one driver
-  * running thousands of queries) superseded checkpoints accumulate in the
-  * block manager faster than GC returns them. These helpers release the
-  * blocks deterministically the moment an intermediate is provably dead.
+  * Why release matters: a local checkpoint's blocks are only reclaimed
+  * when the GC finalizes the backing RDD and the async `ContextCleaner`
+  * notices; in a long-lived session (one driver running thousands of
+  * queries) superseded checkpoints accumulate in the block manager faster
+  * than GC returns them. [[seal]] releases them the moment they are
+  * provably dead.
   *
-  * Ownership contract used across the operators:
-  *  - checkpoints that only ever feed OTHER stages inside the same
-  *    operator call are freed by that operator (via [[seal]]) once the
-  *    final result is materialized;
-  *  - a checkpointed RESULT belongs to the caller — release it with
-  *    [[free]] when done, or [[sweep]] the session between queries, as
-  *    the mains do.
+  * Where an operator seals — three classes, one rule each:
+  *  - iteration state (a loop's per-round frame: connected components,
+  *    k-core, HITS, label propagation, the BFS frontier, the IVF split
+  *    loop): `active = Lifetime.seal(next, active)` keeps the plan
+  *    constant-size in the round count and frees the round it replaces;
+  *  - an operator result: `try Lifetime.seal(out) finally x.unpersist()`
+  *    — the result is eager, so its caches are released before returning
+  *    and the caller owns the sealed result (released by a [[sweep]]
+  *    between queries, as the mains do);
+  *  - an intermediate read by two consumers of one plan (a diamond) or a
+  *    loop's seed: not sealed. Recomputation is Spark's default, exchange
+  *    reuse shares the common subtree, and the enclosing seal runs the
+  *    plan once. An intermediate is sealed only where a `graft.Profile`
+  *    pair shows the plan would otherwise recompute a corpus-sized
+  *    subtree; each such seal says why in a comment.
   */
 object Lifetime {
 
-  /** The RDDs physically backing `df` — its plan's `LogicalRDD` leaves.
-    * For a `localCheckpoint`ed frame this is exactly the checkpoint's
-    * block-backed RDD. */
-  private def backingRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+  /** The RDD holding `df`'s own blocks: a sealed frame, or a projection,
+    * filter or alias of one. A derived frame (a join, an aggregate, a
+    * loop's lazy seed) gives `None`: it never frees a checkpoint it reads. */
+  private def backingRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] = {
+    def strip(p: LogicalPlan): LogicalPlan = p match {
+      case Project(_, child) => strip(child)
+      case Filter(_, child) => strip(child)
+      case SubqueryAlias(_, child) => strip(child)
+      case other => other
     }
-
-  /** Release the checkpoint blocks behind `df`. Safe ONLY once nothing
-    * will execute `df`'s plan again: a local checkpoint truncates
-    * lineage, so an unpersisted one cannot be recomputed. Non-blocking —
-    * the block manager reclaims asynchronously, but the RDD leaves the
-    * persistent-RDD registry immediately. */
-  def free(dfs: DataFrame*): Unit =
-    dfs.foreach(df => backingRdds(df).foreach(_.unpersist(blocking = false)))
+    strip(df.queryExecution.analyzed) match {
+      case lr: LogicalRDD => Some(lr.rdd)
+      case _ => None
+    }
+  }
 
   /** Eagerly materialize `result` as its own local checkpoint, then
-    * release every checkpoint in `intermediates` — they are dead once the
-    * result holds its own blocks. Returns the sealed result (whose
-    * checkpoint the CALLER owns, per the contract above).
+    * release the checkpoint behind each of `intermediates` — they are dead
+    * once the result holds its own blocks (a lineage truncated by a local
+    * checkpoint cannot be recomputed, so pass only frames nothing will
+    * execute again). Returns the sealed result, which the CALLER owns.
     *
     * The checkpoint's jobs carry the caller's `file:line` as their call
     * site, so their stages (AQE's included, which otherwise name a
@@ -60,7 +68,7 @@ object Lifetime {
     val out =
       try result.localCheckpoint(true)
       finally sc.setLocalProperty(CallSiteShort, previous)
-    free(intermediates: _*)
+    intermediates.flatMap(backingRdd).foreach(_.unpersist(blocking = false))
     out
   }
 

@@ -1057,13 +1057,13 @@ object Multimodal {
         explode(sequence(lit(0), lit(3))).as("chunk"))
       .withColumn("chunk_val",
         expr("shiftright(phash, CAST(chunk * 15 AS INT)) & 32767"))
-    val pairs = Dedup.pairsFromBuckets(chunked, "media_id",
+    val (pairs, rows) = Dedup.pairsFromBuckets(chunked, "media_id",
       Seq("chunk", "chunk_val"), maxBucket, payloadCol = Some("phash"))
-    graft.operators.Lifetime.seal(
+    try Lifetime.seal(
       pairs.select(col("id_a"), col("id_b"),
           bit_count(col("phash_a").bitwiseXOR(col("phash_b")))
             .cast(LongType).as("hamming"))
-        .filter(col("hamming") <= maxHamming),
-      pairs)
+        .filter(col("hamming") <= maxHamming))
+    finally rows.unpersist()
   }
 }

@@ -229,12 +229,12 @@ object Similarity {
   def mutualTopKAnchored(df: DataFrame, idCol: String, vecCol: String,
       k: Int = 5, anchorBudget: Int = 256): DataFrame = {
     val base = df.select(col(idCol), col(vecCol))
-    // tiny (budget rows / budget·k rows); both feed two consumers —
-    // checkpoint so the corpus-sized passes run once each
+    // tiny (budget rows / budget·k rows); both feed two consumers of
+    // the one returned plan, which reuses their exchanges (the
+    // [[mutualTopK]] shape)
     val anchors = anchorSample(base, idCol, anchorBudget)
-      .localCheckpoint(true)
     val tkA = bruteForceTopK(anchors, idCol, vecCol, df, idCol, vecCol,
-      k, cosine = true, excludeSelf = true).localCheckpoint(true)
+      k, cosine = true, excludeSelf = true)
     val nbrIds = tkA.select(col("corpus_id").as(idCol)).distinct()
       .join(anchors.select(col(idCol)), Seq(idCol), "left_anti")
     val nbrs = base.join(nbrIds, Seq(idCol), "left_semi")
@@ -595,7 +595,7 @@ object Similarity {
     val result = probeLsh(index, queries, queryId, queryVec, k, multiProbe)
     // Top-k is tiny: materialize it eagerly, then release the cached
     // quantized corpus so repeated calls don't accumulate cached blocks.
-    try result.localCheckpoint(true) finally corpusQ.unpersist()
+    try Lifetime.seal(result) finally corpusQ.unpersist()
   }
 
   /** IVF (inverted-file) ANN — the coarse-quantizer scale path next to
@@ -1052,24 +1052,19 @@ object Similarity {
       queries: DataFrame, queryId: String, queryVec: String,
       corpus: DataFrame, corpusId: String, corpusVec: String,
       k: Int, numCentroids: Int = 16, numCoarse: Int = 4,
-      nprobe: Int = 2, cprobe: Int = 2,
-      maxBroadcastFine: Int = 1 << 16): DataFrame = {
+      nprobe: Int = 2, cprobe: Int = 2): DataFrame = {
     registered(corpus)
     registered(queries) // sessions can differ (e.g. foreachBatch clones)
     // Raw order/limit first (sort key is md5_60(id) only), quantize the
     // K survivors — see the same note in [[ivfTopK]]. The 0 sentinel
     // auto-sizes here too ([[resolveCentroids]]) so the engine-wide
-    // convention holds on every entry point. Resolve ONCE: the
-    // broadcast bound below must compare the RESOLVED K, not the raw
-    // sentinel (0 would trivially pass any bound and broadcast a fine
-    // table the auto-size may have grown past driver memory).
+    // convention holds on every entry point.
     val kFine = resolveCentroids(corpus, numCentroids)
     val pool = corpus.select(col(corpusId).as("cid"), col(corpusVec).as("cvec"))
       .orderBy(Dedup.md5_60(col("cid").cast(StringType)), col("cid"))
       .limit(kFine)
       .select(col("cid"), V.quantize6(col("cvec")).as("cq"))
       .withColumn("c_s2", V.dotQ12(col("cq"), col("cq")))
-      .localCheckpoint(true) // tiny; one compute for all consumers below
     val fine = pool.select(col("cid").as("fine_id"), col("cq").as("fineq"),
       col("c_s2").as("fine_s2"))
     val coarse = pool
@@ -1081,25 +1076,19 @@ object Similarity {
       vs2 + cs2 - lit(2.0) * V.dotQ12(vq, cq)
 
     // fine → coarse: each fine centroid hangs off its nearest coarse.
-    // The coarse side is always broadcast (≈√K by construction); the
-    // FINE table is only broadcast below `maxBroadcastFine` rows — real
-    // 100 TB IVF wants K ∝ n (10⁶+ centroids, a multi-GB broadcast), and
-    // past the threshold both consumers below already hold the shuffle
-    // key (`coarse_id` for cell assignment and query probing), so the
-    // hint is simply dropped and the join shuffles on that key instead
-    // of ceilinging K at what the driver can broadcast.
-    val fc0 = fine.crossJoin(broadcast(coarse))
+    // The coarse side is always broadcast (≈√K by construction). The
+    // fine table carries no hint: AQE broadcasts it while it is small,
+    // and at the K ∝ n of a 100 TB IVF (10⁶+ centroids) both consumers
+    // below join it on their shuffle key (`coarse_id` for cell
+    // assignment and query probing) instead of ceilinging K at what the
+    // driver can broadcast.
+    val fc = fine.crossJoin(broadcast(coarse))
       .withColumn("d2",
         d2(col("fineq"), col("fine_s2"), col("coarseq"), col("coarse_s2")))
       .withColumn("rn", row_number().over(Window.partitionBy(col("fine_id"))
         .orderBy(col("d2"), col("coarse_id"))))
       .filter(col("rn") === 1)
       .select(col("fine_id"), col("fineq"), col("fine_s2"), col("coarse_id"))
-    // Past the threshold, materialize fc once (it feeds both the cell
-    // assignment and the query probe — a lazy diamond would recompute
-    // the fine→coarse window per consumer).
-    val fc = if (kFine <= maxBroadcastFine) broadcast(fc0)
-             else fc0.localCheckpoint(true)
 
     // corpus pass 1: nearest coarse cell (O(C) per row, min_by partial agg)
     val corpusQ = corpus.select(col(corpusId).as("corpus_id"),
@@ -1187,8 +1176,8 @@ object Similarity {
     registered(queries) // sessions can differ (e.g. foreachBatch clones)
     require(numSubspaces >= 1 && numCodes >= 1,
       "numSubspaces and numCodes must be >= 1")
+    // tiny; feeds encoding AND query tables through one reused exchange
     val cb = pqCodebook(corpus, corpusId, corpusVec, numSubspaces, numCodes)
-      .localCheckpoint(true) // tiny; feeds encoding AND query tables
     pqScore(pqEncode(corpus, corpusId, corpusVec, cb, numSubspaces),
       pqTabs(queries, queryId, queryVec, cb, numSubspaces), numSubspaces, k)
   }
@@ -1674,14 +1663,13 @@ object Similarity {
     val costs = cand.groupBy(col("np"))
       .agg(countDistinct(col("query_id")).as("n_queries"),
         count(lit(1)).as("n_candidates"))
-    try costs.join(hits, Seq("np"), "left")
+    try Lifetime.seal(costs.join(hits, Seq("np"), "left")
       .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
       .select(col("np").as("nprobe"), col("n_queries"),
         col("n_candidates"), col("n_hits"),
         expr(s"(n_hits * 1000000L) div (${k}L * n_queries)")
           .as("recall_ppm"))
-      .orderBy(col("nprobe"))
-      .localCheckpoint(true)
+      .orderBy(col("nprobe")))
     finally cached.foreach(_.unpersist())
   }
 
@@ -1903,7 +1891,6 @@ object Similarity {
       .select(col("query_id"), col("cent_id"))
     if (!residual) {
       val cb = pqCodebook(corpus, corpusId, corpusVec, m, numCodes)
-        .localCheckpoint(true)
       val enc = pqEncode(corpus, corpusId, corpusVec, cb, m)
       val cand = idx.cells.select(col("corpus_id"), col("cent_id"))
         .join(broadcast(probes), Seq("cent_id"))
@@ -1920,9 +1907,10 @@ object Similarity {
           Seq("cent_id"))
         .select(col("corpus_id"), col("cent_id"),
           zip_with(col("cq"), col("centq"), (x, y) => x - y).as("cq"))
-        .localCheckpoint(true) // feeds codebook sampling AND encoding
+      // resQ feeds codebook sampling AND encoding, cb the encoding AND
+      // the query tables: one plan, through reused exchanges
       val cb = pqCodebookQ(resQ.select(col("corpus_id"), col("cq")),
-        m, numCodes).localCheckpoint(true)
+        m, numCodes)
       val enc = pqEncodeQ(resQ.select(col("corpus_id"), col("cq")), cb, m)
         .join(resQ.select(col("corpus_id"), col("cent_id")), Seq("corpus_id"))
       // base term: exact q · centroid per (query, probed cell), as the
@@ -2100,18 +2088,22 @@ object Similarity {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$dir/centroids")
     val cent = spark.read.parquet(s"$dir/centroids")
+    // feeds the codebook write AND the codes write — two jobs, so cached
+    // for both and released after
     val resQ = residualsOf(
         ivfCells(corpus, corpusId, corpusVec, cent), cent)
-      .localCheckpoint(true) // feeds codebook sampling AND encoding
-    pqCodebookQ(resQ.select(col("corpus_id"), col("cq")),
-        numSubspaces, numCodes)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dir/codebook")
-    pqEncodeQ(resQ.select(col("corpus_id"), col("cq")),
-        spark.read.parquet(s"$dir/codebook"), numSubspaces)
-      .join(resQ.select(col("corpus_id"), col("cent_id")), Seq("corpus_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dir/codes")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      pqCodebookQ(resQ.select(col("corpus_id"), col("cq")),
+          numSubspaces, numCodes)
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$dir/codebook")
+      pqEncodeQ(resQ.select(col("corpus_id"), col("cq")),
+          spark.read.parquet(s"$dir/codebook"), numSubspaces)
+        .join(resQ.select(col("corpus_id"), col("cent_id")), Seq("corpus_id"))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$dir/codes")
+    } finally resQ.unpersist()
     import spark.implicits._
     Seq((numSubspaces, numCodes)).toDF("num_subspaces", "num_codes")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -2224,7 +2216,7 @@ object Similarity {
         V.quantize6(col(vecCol)).as("qv"))
       .withColumn("nrm", V.normQ12(col("qv")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs = Dedup.pairsFromBuckets(b, "x_id", Seq("table", "bucket"))
+    val (pairs, rows) = Dedup.pairsFromBuckets(b, "x_id", Seq("table", "bucket"))
     val result = pairs
       .join(side.select(col("id").as("id_a"), col("qv").as("qa"),
         col("nrm").as("norm_a")), Seq("id_a"))
@@ -2234,10 +2226,10 @@ object Similarity {
         V.dotQ12(col("qa"), col("qb")) / (col("norm_a") * col("norm_b")))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
-    // Eagerly materialize the (small) pair set, free the candidate
-    // checkpoint deterministically, then release the cached vector+norm
-    // side so repeated calls don't accumulate blocks.
-    try Lifetime.seal(result, pairs) finally side.unpersist()
+    // Eagerly materialize the (small) pair set, then release the bucket
+    // rows and the cached vector+norm side so repeated calls don't
+    // accumulate blocks.
+    try Lifetime.seal(result) finally { rows.unpersist(); side.unpersist() }
   }
 
   /** SEMANTIC near-duplicate pairs, SemDeDup-style: cluster the embedding
@@ -2282,7 +2274,7 @@ object Similarity {
       numCentroids, refineRounds, maxCell, splitFanout, maxDepth)
     val side = leaves.select(col("corpus_id").as("id"), col("cq"))
       .withColumn("nrm", V.normQ12(col("cq")))
-    val pairs = Dedup
+    val (pairs, rows) = Dedup
       .pairsFromBuckets(leaves, "corpus_id", Seq("cell"), maxCell)
     val result = pairs
       .join(side.select(col("id").as("id_a"), col("cq").as("qa"),
@@ -2293,10 +2285,10 @@ object Similarity {
         V.dotQ12(col("qa"), col("qb")) / (col("norm_a") * col("norm_b")))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
-    // Seal the verified pairs, then free the candidate checkpoint AND
-    // every per-level assignment checkpoint of the hierarchical split —
-    // all of them only fed this call.
-    Lifetime.seal(result, (pairs +: levels): _*)
+    // Seal the verified pairs, then free every per-level assignment
+    // checkpoint of the hierarchical split and the bucket rows — all of
+    // them only fed this call.
+    try Lifetime.seal(result, levels: _*) finally rows.unpersist()
   }
 
   /** [[semanticNearDupPairs]] composed with EXACT (identical-vector)
@@ -2327,10 +2319,10 @@ object Similarity {
     * join on the digest, map-side partial agg collapsing duplicate
     * classes before the exchange. The corpus is scanned+quantized once
     * into a cache for the class arm, and the representative set is
-    * materialized eagerly — the semantic chain behind it scans its
-    * input several times (seed selection, Lloyd rounds, assignment),
-    * and each of those scans must hit the checkpointed reps, not
-    * re-run the semi-join. */
+    * sealed — the semantic chain behind it runs several jobs over its
+    * input (seed selection, Lloyd rounds, assignment, the over-full
+    * counts), and each of them must read the sealed reps, not re-run
+    * the corpus semi-join. */
   def semanticNearDupPairsWithExact(
       df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, numCentroids: Int = 16, refineRounds: Int = 1,
@@ -2349,16 +2341,14 @@ object Similarity {
         .filter(col("id") =!= col("keep_id"))
         .select(col("keep_id").as("id_a"), col("id").as("id_b"),
           lit(1.0).as("cosine"))
-        .localCheckpoint(true)
-      val reps = df.join(
-          classes.select(col("keep_id").as(idCol)), Seq(idCol), "left_semi")
-        .localCheckpoint(true)
+      val reps = Lifetime.seal(df.join(
+          classes.select(col("keep_id").as(idCol)), Seq(idCol), "left_semi"))
       // The semantic arm seals its own result, so by the time the union
-      // is sealed every consumer of q/reps/exactPairs has executed —
-      // free all three; the caller owns exactly the sealed union.
+      // is sealed every consumer of reps has executed — free it and the
+      // semantic result; the caller owns exactly the sealed union.
       val sem = semanticNearDupPairs(reps, idCol, vecCol, threshold,
         numCentroids, refineRounds, maxCell, splitFanout, maxDepth)
-      Lifetime.seal(exactPairs.unionByName(sem), exactPairs, reps, sem)
+      Lifetime.seal(exactPairs.unionByName(sem), reps, sem)
     } finally q.unpersist()
   }
 
@@ -2371,8 +2361,10 @@ object Similarity {
     * assert leaf-size and split-equality properties directly.
     *
     * Driver work per level is one small aggregate (the over-full key
-    * set); the loop runs ≤ `maxDepth` rounds with `localCheckpoint`
-    * cutting lineage each round, like [[Dedup.connectedComponents]].
+    * set); the loop runs ≤ `maxDepth` rounds, each sealed to cut
+    * lineage, like [[Dedup.connectedComponents]]. Level 0 is sealed
+    * too: the over-full count and the final result are two jobs that
+    * would otherwise each rerun the corpus-wide IVF assignment.
     * Rows whose cell is already ≤ `maxCell` can never become over-full
     * again, so each level checkpoints and recounts ONLY the reassigned
     * rows — finished leaves accumulate outside the loop (each level's
@@ -2400,17 +2392,23 @@ object Similarity {
       numCentroids: Int, refineRounds: Int, maxCell: Int,
       splitFanout: Int, maxDepth: Int): (DataFrame, Seq[DataFrame]) = {
     require(splitFanout >= 2, s"splitFanout must be >= 2, got $splitFanout")
+    // Every level is sealed and kept: the next level's finished slice
+    // still reads it, so all of them stay alive until the caller's seal
+    // frees them.
     val levels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def level(assignment: DataFrame): DataFrame = {
+      levels += Lifetime.seal(assignment)
+      levels.last
+    }
     // `active` holds only rows whose leaf might still be over-full; rows
     // in a ≤ maxCell cell are final and accumulate in `finished` without
     // ever being checkpointed or recounted again.
-    var active = buildIvfIndex(df, idCol, vecCol, numCentroids, refineRounds)
+    var active = level(
+      buildIvfIndex(df, idCol, vecCol, numCentroids, refineRounds)
       .cells // (corpus_id, cent_id, cq) — quantized vector rides assignment
       .select(col("corpus_id"), col("cent_id").cast(StringType).as("cell"),
         col("cq"))
-      .withColumn("c_s2", V.dotQ12(col("cq"), col("cq")))
-      .localCheckpoint(true)
-    levels += active
+      .withColumn("c_s2", V.dotQ12(col("cq"), col("cq"))))
     val finished = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var depth = 0
     var overKeys = active.groupBy(col("cell"))
@@ -2457,8 +2455,7 @@ object Similarity {
           concat(col("m.cell"), lit("/"),
             col("m.cent_id").cast(StringType)).as("cell"),
           col("m.cq").as("cq"), col("m.c_s2").as("c_s2"))
-      active = reassigned.localCheckpoint(true)
-      levels += active
+      active = level(reassigned)
       depth += 1
       overKeys = active.groupBy(col("cell"))
         .agg(count(lit(1)).as("cell_n"))

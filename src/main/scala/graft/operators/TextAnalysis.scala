@@ -768,7 +768,7 @@ object TextAnalysis {
     * N and L, then term frequencies, where the term filter drops every
     * non-query token map-side before the groupBy shuffle. The tf table
     * (query-term rows only — tiny relative to the corpus) materializes
-    * once (`localCheckpoint`) and feeds BOTH the per-term df counts and
+    * once (`Lifetime.seal`) and feeds BOTH the per-term df counts and
     * the scoring join; left lazy, Spark re-plans the df branch as a
     * distinct-shaped aggregate whose exchange cannot reuse tf's, and
     * the corpus gets scanned and exploded a third time. The tiny df and
@@ -786,12 +786,11 @@ object TextAnalysis {
       size(tokens(col(textCol))).cast(LongType).as("dl"),
       tokens(col(textCol)).as("arr"))
     val consts = base.agg(count(lit(1)).as("nn"), sum(col("dl")).as("ll"))
-    val tf = base
+    val tf = Lifetime.seal(base
       .select(col("doc_id"), col("dl"), explode(col("arr")).as("tok"))
       .filter(col("tok").isin(terms: _*))
       .groupBy(col("doc_id"), col("dl"), col("tok"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("tf")))
     val dfq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val contrib = expr(
       """(CAST(2 * (nn - df) + 1 AS DECIMAL(38,0))
@@ -868,11 +867,12 @@ object TextAnalysis {
   def ngramNovelty(df: DataFrame, idCol: String, textCol: String,
       shingleWords: Int = 8): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession)
-    val post = df.select(col(idCol).cast(LongType).as("doc_id"),
+    // read twice, by the df fold and the join-back: two different
+    // exchanges, so left lazy the corpus would be shingled twice
+    val post = Lifetime.seal(df.select(col(idCol).cast(LongType).as("doc_id"),
         graft.functions.WordShingleFunctions
           .wordShingles(col(textCol), shingleWords).as("sh_arr"))
-      .select(col("doc_id"), explode(col("sh_arr")).as("shingle"))
-      .localCheckpoint(true) // read twice: df fold + join-back
+      .select(col("doc_id"), explode(col("sh_arr")).as("shingle")))
     val dfq = post.groupBy(col("shingle"))
       .agg(count(lit(1)).as("df")) // postings are distinct per doc
     Lifetime.seal(
@@ -1044,7 +1044,8 @@ object TextAnalysis {
           element_at(col("arr"), i + 2).as("w2")))).as("b"))
       .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+    // pc and vrow each feed two branches of every plan that scores with
+    // the model; each branch pair shares one reused exchange
     val ctx = pc.groupBy(col("w1")).agg(sum(col("c")).as("cctx"))
     // reference scan #2: V = distinct non-empty tokens + 1 (the OOV
     // class). Not derivable from pc — single-token documents contribute
@@ -1052,7 +1053,6 @@ object TextAnalysis {
     val vrow = refArr.select(explode(col("arr")).as("tok"))
       .filter(length(col("tok")) > 0)
       .agg((count_distinct(col("tok")) + 1).as("v" + suffix))
-      .localCheckpoint(true)
     val v = col("v" + suffix)
     val pairCosts = pc.join(ctx, Seq("w1")).crossJoin(broadcast(vrow))
       .select(col("w1"), col("w2"),
@@ -1214,9 +1214,9 @@ object TextAnalysis {
     *
     * Scale shape: ONE corpus scan collapses to the compact
     * `(doc, token) → tf` postings aggregate (map-side combined), sealed
-    * with `localCheckpoint` exactly like the dedup postings tables —
-    * left lazy, the df branch re-plans as a second corpus scan + explode
-    * (the [[bm25Rational]] lesson). df is a `groupBy(token)` over those
+    * (`Lifetime.seal`) — left lazy, the df branch re-plans as a
+    * distinct-shaped aggregate whose exchange cannot reuse tf's, a
+    * second corpus scan + explode (the [[bm25Rational]] lesson). df is a `groupBy(token)` over those
     * postings (partial aggregation absorbs the stopword hot keys
     * map-side — deliberately NOT a `count over (partition by token)`
     * window, which would ship every posting of a web-scale stopword
@@ -1230,12 +1230,11 @@ object TextAnalysis {
     import graft.functions.FixedLogFunctions.log2QuarterBits
     graft.functions.GraftFunctions.register(df.sparkSession)
     val consts = df.agg(count(lit(1)).as("nn"))
-    val tf = df
+    val tf = Lifetime.seal(df
       .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("token"))
       .filter(length(col("token")) > 0)
       .groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("tf")))
     val dfq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("score").desc, col("token"))

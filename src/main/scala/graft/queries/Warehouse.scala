@@ -746,11 +746,39 @@ object Warehouse {
     * pruning to pairs with meaningful support first, which minCount
     * does). */
   def associationRules(df: DataFrame, basketCol: String, itemCol: String,
-      minCount: Long = 2L, topK: Int = 20): DataFrame = {
+      minCount: Long = 2L, topK: Int = 20): DataFrame =
+    sealedOverFrequentPairs(df, basketCol, itemCol, minCount) {
+      (li, freq, pairs) =>
+      val nb = li.select(col("b")).distinct().agg(count(lit(1)).as("n_baskets"))
+      pairs
+        .join(freq.select(col("i").as("item_a"), col("n_i").as("n_a")),
+          Seq("item_a"))
+        .join(freq.select(col("i").as("item_b"), col("n_i").as("n_b")),
+          Seq("item_b"))
+        .crossJoin(broadcast(nb))
+        .select(col("item_a"), col("item_b"), col("n_pair"),
+          col("n_a"), col("n_b"), col("n_baskets"),
+          (col("n_pair").cast(DoubleType) / col("n_a").cast(DoubleType))
+            .as("confidence_ab"),
+          ((col("n_pair") * col("n_baskets")).cast(DoubleType) /
+            (col("n_a") * col("n_b")).cast(DoubleType)).as("lift"))
+        .orderBy(col("n_pair").desc, col("item_a"), col("item_b"))
+        .limit(topK)
+    }
+
+  /** The apriori front [[associationRules]] and [[itemSimilarityTopK]]
+    * share: distinct `(b, i)` basket items, the items of support ≥
+    * `minCount` as `(i, n_i)`, and the within-basket pairs of frequent
+    * items as `(item_a < item_b, n_pair ≥ minCount)`. `finish(li, freq,
+    * pairs)` builds the result, which is sealed before the two caches are
+    * released. */
+  private def sealedOverFrequentPairs(df: DataFrame, basketCol: String,
+      itemCol: String, minCount: Long)(
+      finish: (DataFrame, DataFrame, DataFrame) => DataFrame): DataFrame = {
     val li = df.select(col(basketCol).cast(LongType).as("b"),
       col(itemCol).cast(LongType).as("i")).distinct().persist()
-    val itemCnt = li.groupBy(col("i")).agg(count(lit(1)).as("n_i"))
-    val freq = itemCnt.filter(col("n_i") >= minCount).persist()
+    val freq = li.groupBy(col("i")).agg(count(lit(1)).as("n_i"))
+      .filter(col("n_i") >= minCount).persist()
     val pruned = li.join(freq.select("i"), Seq("i"), "left_semi")
     val pairs = pruned.as("a")
       .join(pruned.as("b"),
@@ -758,23 +786,7 @@ object Warehouse {
       .groupBy(col("a.i").as("item_a"), col("b.i").as("item_b"))
       .agg(count(lit(1)).as("n_pair"))
       .filter(col("n_pair") >= minCount)
-    val nb = li.select(col("b")).distinct().agg(count(lit(1)).as("n_baskets"))
-    val out = pairs
-      .join(freq.select(col("i").as("item_a"), col("n_i").as("n_a")),
-        Seq("item_a"))
-      .join(freq.select(col("i").as("item_b"), col("n_i").as("n_b")),
-        Seq("item_b"))
-      .crossJoin(broadcast(nb))
-      .select(col("item_a"), col("item_b"), col("n_pair"),
-        col("n_a"), col("n_b"), col("n_baskets"),
-        (col("n_pair").cast(DoubleType) / col("n_a").cast(DoubleType))
-          .as("confidence_ab"),
-        ((col("n_pair") * col("n_baskets")).cast(DoubleType) /
-          (col("n_a") * col("n_b")).cast(DoubleType)).as("lift"))
-      .orderBy(col("n_pair").desc, col("item_a"), col("item_b"))
-      .limit(topK)
-    // materialize before releasing the two shared caches
-    try out.localCheckpoint(true)
+    try graft.operators.Lifetime.seal(finish(li, freq, pairs))
     finally { li.unpersist(); freq.unpersist() }
   }
 
@@ -899,44 +911,32 @@ object Warehouse {
     * double division over exact integers (sqrt is IEEE-exact), and the
     * rank order `(cosine desc, neighbor)` is fully tie-broken. */
   def itemSimilarityTopK(df: DataFrame, basketCol: String,
-      itemCol: String, minCount: Long = 2L, topK: Int = 5): DataFrame = {
-    val li = df.select(col(basketCol).cast(LongType).as("b"),
-      col(itemCol).cast(LongType).as("i")).distinct().persist()
-    val freq = li.groupBy(col("i")).agg(count(lit(1)).as("n_i"))
-      .filter(col("n_i") >= minCount).persist()
-    val pruned = li.join(freq.select("i"), Seq("i"), "left_semi")
-    val pairs = pruned.as("a")
-      .join(pruned.as("b"),
-        col("a.b") === col("b.b") && col("a.i") < col("b.i"))
-      .groupBy(col("a.i").as("ia"), col("b.i").as("ib"))
-      .agg(count(lit(1)).as("n_pair"))
-      .filter(col("n_pair") >= minCount)
-    val mirrored = pairs
-      .select(col("ia").as("item"), col("ib").as("neighbor"),
-        col("n_pair"))
-      .unionAll(pairs.select(col("ib").as("item"),
-        col("ia").as("neighbor"), col("n_pair")))
-    val scored = mirrored
-      .join(freq.select(col("i").as("item"), col("n_i").as("n_item")),
-        Seq("item"))
-      .join(freq.select(col("i").as("neighbor"),
-        col("n_i").as("n_neighbor")), Seq("neighbor"))
-      .withColumn("cosine",
-        col("n_pair").cast(DoubleType) /
-          sqrt(col("n_item").cast(DoubleType) *
-            col("n_neighbor").cast(DoubleType)))
-    val w = Window.partitionBy(col("item"))
-      .orderBy(col("cosine").desc, col("neighbor"))
-    val out = scored
-      .withColumn("sim_rank", row_number().over(w).cast(LongType))
-      .filter(col("sim_rank") <= topK)
-      .select(col("item"), col("neighbor"), col("n_pair"),
-        col("n_item"), col("n_neighbor"), col("cosine"),
-        col("sim_rank"))
-    // materialize before releasing the two shared caches
-    try out.localCheckpoint(true)
-    finally { li.unpersist(); freq.unpersist() }
-  }
+      itemCol: String, minCount: Long = 2L, topK: Int = 5): DataFrame =
+    sealedOverFrequentPairs(df, basketCol, itemCol, minCount) {
+      (_, freq, pairs) =>
+      val mirrored = pairs
+        .select(col("item_a").as("item"), col("item_b").as("neighbor"),
+          col("n_pair"))
+        .unionAll(pairs.select(col("item_b").as("item"),
+          col("item_a").as("neighbor"), col("n_pair")))
+      val scored = mirrored
+        .join(freq.select(col("i").as("item"), col("n_i").as("n_item")),
+          Seq("item"))
+        .join(freq.select(col("i").as("neighbor"),
+          col("n_i").as("n_neighbor")), Seq("neighbor"))
+        .withColumn("cosine",
+          col("n_pair").cast(DoubleType) /
+            sqrt(col("n_item").cast(DoubleType) *
+              col("n_neighbor").cast(DoubleType)))
+      val w = Window.partitionBy(col("item"))
+        .orderBy(col("cosine").desc, col("neighbor"))
+      scored
+        .withColumn("sim_rank", row_number().over(w).cast(LongType))
+        .filter(col("sim_rank") <= topK)
+        .select(col("item"), col("neighbor"), col("n_pair"),
+          col("n_item"), col("n_neighbor"), col("cosine"),
+          col("sim_rank"))
+    }
 
   /** LATENCY QUANTILE PROFILE per group — the SLA read on any
     * start→end timestamp pair (order→ship, request→response): per

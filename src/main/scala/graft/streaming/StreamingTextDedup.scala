@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Lifetime}
 
 /** Online near-duplicate text dedup at ingest: each micro-batch of
   * `(id, text)` documents is deduplicated (a) WITHIN the batch and
@@ -151,9 +151,11 @@ object StreamingTextDedup {
             //    the reverse order would leave buckets whose probe
             //    crashes on the missing sigs dir FOREVER (a replay
             //    re-runs the probe before it ever re-appends).
-            val admittedSigs = sigs
-              .join(admitted.select(col(idCol)), Seq(idCol), "left_semi")
-              .localCheckpoint(true) // sever the index-path lineage too
+            // sealed: two index writes read it, and its lineage reads the
+            // index paths they append to; the in-batch pairs are dead
+            val admittedSigs = Lifetime.seal(sigs
+              .join(admitted.select(col(idCol)), Seq(idCol), "left_semi"),
+              inBatchPairs)
             admittedSigs
               .select(col(idCol).cast(LongType).as("doc_id"), col("sig"))
               .write.mode(SaveMode.Append).parquet(s"$indexDir/sigs")
@@ -169,7 +171,6 @@ object StreamingTextDedup {
     } finally {
       survivors.unpersist()
       batchSigs.unpersist()
-      graft.operators.Lifetime.free(inBatchPairs)
     }
   }
 

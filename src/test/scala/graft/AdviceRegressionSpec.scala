@@ -242,31 +242,19 @@ class AdviceRegressionSpec extends SparkSpec {
 
   // ---- round-12 advice fixes ----
 
-  test("ivfTopK2: the fine-table broadcast bound compares the RESOLVED " +
-      "K, so the 0 sentinel cannot bypass it") {
-    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+  test("ivfTopK2: 0 sentinel, no-broadcast arm, same rows") {
     val vecs = (0L until 500L).map(i =>
         (i, Array((i % 7).toFloat, (i % 11).toFloat, 1.0f, 0.01f * i)))
       .toDF("vec_id", "embedding")
     val q = vecs.filter(col("vec_id") < 3)
-    // sentinel resolves to K = 22 (> 10): with the old raw-numCentroids
-    // bound, 0 <= 10 always broadcast the fine table regardless of the
-    // resolved size; fixed, the hint must drop exactly like an explicit
-    // K = 22 over the same bound
-    def topk2(maxFine: Int) = Similarity.ivfTopK2(q, "vec_id",
-      "embedding", vecs, "vec_id", "embedding", k = 3,
-      numCentroids = 0, maxBroadcastFine = maxFine)
-    def hints(df: DataFrame): Int =
-      df.queryExecution.analyzed.collect { case h: ResolvedHint => h }.size
-    val over = topk2(10)       // resolved 22 > 10: shuffle path
-    val under = topk2(1 << 16) // resolved 22 <= 2^16: broadcast path
-    assert(hints(under) > hints(over),
-      s"fine-table broadcast hint must drop past the bound: " +
-        s"under=${hints(under)} over=${hints(over)}")
-    // and the shuffle fallback stays result-identical
-    def rows(df: DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(rows(over) == rows(under))
+    // the sentinel resolves to K = 22; the fine table carries no hint, so
+    // with auto-broadcast off it shuffles — and returns the same rows
+    def rows() = Similarity.ivfTopK2(q, "vec_id", "embedding", vecs,
+        "vec_id", "embedding", k = 3, numCentroids = 0)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val broadcastArm = rows()
+    assert(broadcastArm.nonEmpty)
+    assert(withoutBroadcast(rows()) == broadcastArm)
   }
 
   test("anchorSample: non-numeric ids refused loudly; null ids can " +

@@ -8,7 +8,7 @@ import graft.operators.Similarity
   * docstrings promise: append ≡ rebuild equality, the no-old-scan
   * property (the appended batch is indexed without the already-indexed
   * corpus data even EXISTING), hierarchicalCells leaf-size/partition/
-  * split-equality, and the maxBroadcastFine no-broadcast plan. */
+  * split-equality, and the ivfTopK2 fine table's no-broadcast plan. */
 class IndexMaintenanceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -303,14 +303,13 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(kept == Set(0L, 31L, 32L), s"survivors: $kept")
   }
 
-  test("ivfTopK2 maxBroadcastFine: crossing it drops the fine broadcast, same rows") {
+  test("ivfTopK2 fine table: no-broadcast arm, same rows") {
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
-    // Kill auto-broadcast and AQE so the plan shows exactly what the
-    // operator asked for: hinted broadcasts stay, the un-hinted fine
-    // table must shuffle once the threshold is crossed.
+    // AQE off so the executed plan shows exactly what the operator asked
+    // for: the hinted coarse broadcast stays, and the unhinted fine table
+    // must shuffle once auto-broadcast is off.
     val conf = spark.conf
     val savedAqe = conf.get("spark.sql.adaptive.enabled", "true")
-    val savedThresh = conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     def fineBroadcasts(df: DataFrame): Int = {
       df.collect()
       df.queryExecution.executedPlan.collect {
@@ -318,30 +317,27 @@ class IndexMaintenanceSpec extends SparkSpec {
           if bx.output.exists(_.name == "fineq") => bx
       }.size
     }
+    def rows(df: DataFrame): Set[(Long, Long, Double, Long)] =
+      df.collect().map(r =>
+        (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     try {
       conf.set("spark.sql.adaptive.enabled", "false")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      def run(maxFine: Int): DataFrame = Similarity.ivfTopK2(
+      def run(): DataFrame = Similarity.ivfTopK2(
         vecs.filter(col("vec_id") === 0L), "vec_id", "embedding",
         vecs, "vec_id", "embedding", k = 2,
-        numCentroids = 2, numCoarse = 1, nprobe = 1, cprobe = 1,
-        maxBroadcastFine = maxFine)
-      val hinted = run(maxFine = 1 << 16)
-      val sharded = run(maxFine = 1) // 2 centroids > 1 → threshold crossed
-      // control: below the threshold the fine→coarse table IS broadcast
-      assert(fineBroadcasts(hinted) > 0,
+        numCentroids = 2, numCoarse = 1, nprobe = 1, cprobe = 1)
+      val broadcastArm = run()
+      val (shuffledBroadcasts, shuffledRows) = withoutBroadcast {
+        val df = run()
+        (fineBroadcasts(df), rows(df))
+      }
+      // control: with auto-broadcast on, the tiny fine table IS broadcast
+      assert(fineBroadcasts(broadcastArm) > 0,
         "control lost its broadcast; the assertion below would be vacuous")
-      // past the threshold: no BroadcastExchange carries the fine table
-      assert(fineBroadcasts(sharded) == 0,
-        "fine table still broadcast past maxBroadcastFine")
-      def rows(df: DataFrame): Set[(Long, Long, Double, Long)] =
-        df.collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-      assert(rows(sharded) == rows(hinted) && rows(hinted).nonEmpty,
+      assert(shuffledBroadcasts == 0,
+        "fine table still broadcast with auto-broadcast off")
+      assert(shuffledRows == rows(broadcastArm) && shuffledRows.nonEmpty,
         "shuffle arm changed the operator's results")
-    } finally {
-      conf.set("spark.sql.adaptive.enabled", savedAqe)
-      conf.set("spark.sql.autoBroadcastJoinThreshold", savedThresh)
-    }
+    } finally conf.set("spark.sql.adaptive.enabled", savedAqe)
   }
 }

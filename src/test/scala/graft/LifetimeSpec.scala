@@ -6,8 +6,7 @@ import graft.operators.{Dedup, Lifetime, Similarity}
 
 /** Deterministic release of localCheckpoint blocks — the long-session
   * storage-hygiene contract: operators free their internal checkpoints as
-  * soon as the sealed result exists; callers (or a session sweep) free
-  * results. Asserted via the persistent-RDD registry, which tracks every
+  * soon as the sealed result exists; a session sweep frees results. Asserted via the persistent-RDD registry, which tracks every
   * checkpointed/persisted RDD until unpersist. */
 class LifetimeSpec extends SparkSpec {
   import spark.implicits._
@@ -29,25 +28,46 @@ class LifetimeSpec extends SparkSpec {
     0
   }
 
-  test("free releases a localCheckpoint from the persistent-RDD registry") {
-    val before = sweptBaseline()
-    val cp = Seq(1, 2, 3).toDF("x").localCheckpoint(true)
-    assert(registrySize == before + 1,
-      "a localCheckpoint must register its backing RDD")
-    assert(cp.count() == 3)
-    Lifetime.free(cp)
-    assert(registrySize == before,
-      "free must deterministically deregister the checkpoint")
-  }
-
   test("seal keeps only the result checkpoint alive") {
     val before = sweptBaseline()
     val mid = Seq(1, 2, 3, 4).toDF("x").localCheckpoint(true)
     val out = Lifetime.seal(mid.filter(col("x") > 2), mid)
     assert(out.collect().map(_.getInt(0)).sorted.toSeq == Seq(3, 4))
     assert(registrySize == before + 1, "only the sealed result remains")
-    Lifetime.free(out)
+    Lifetime.sweep(spark)
     assert(registrySize == before)
+  }
+
+  test("seal leaves the checkpoints a derived intermediate reads alone") {
+    // a loop's lazy seed (an aggregate over a caller's checkpoint) holds
+    // no blocks of its own: sealing the next round past it must not free
+    // the checkpoint it reads
+    val before = sweptBaseline()
+    val input = Seq(1, 2, 2, 3).toDF("x").localCheckpoint(true)
+    val seed = input.groupBy("x").count()
+    val out = Lifetime.seal(seed.filter(col("count") > 1), seed)
+    assert(out.collect().map(_.getInt(0)).toSeq == Seq(2))
+    assert(registrySize == before + 2, "the input and the result remain")
+    assert(input.count() == 4, "the caller's checkpoint is still readable")
+    Lifetime.sweep(spark)
+  }
+
+  test("Lifetime.scala is the only main source that calls localCheckpoint") {
+    // one eager primitive: every materialization goes through seal, so
+    // every eager stage is named and every superseded round is freed
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val sources = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(sources.nonEmpty, s"no sources under ${root.toAbsolutePath}")
+    val offenders = for {
+      f <- sources if f.getFileName.toString != "Lifetime.scala"
+      (line, n) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      code = line.split("//", 2)(0).trim // comments excluded
+      if !code.startsWith("*") && !code.startsWith("/*") &&
+        code.contains(".localCheckpoint(")
+    } yield s"$f:${n + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("near-dup operators leave only their sealed result behind") {
@@ -59,7 +79,7 @@ class LifetimeSpec extends SparkSpec {
     assert(registrySize == before + 1,
       s"minhash must free its internal pair/signature state " +
         s"(registry grew by ${registrySize - before})")
-    Lifetime.free(pairs)
+    Lifetime.sweep(spark)
     assert(registrySize == before)
 
     val prefix = Dedup.ngramJaccardPairsPrefix(docs, "doc_id", "text",
@@ -68,7 +88,7 @@ class LifetimeSpec extends SparkSpec {
     assert(registrySize == before + 1,
       s"prefix join must free its candidate checkpoint " +
         s"(registry grew by ${registrySize - before})")
-    Lifetime.free(prefix)
+    Lifetime.sweep(spark)
     assert(registrySize == before)
   }
 
@@ -85,7 +105,7 @@ class LifetimeSpec extends SparkSpec {
     assert(registrySize == before + 1,
       s"CC must free superseded rounds (registry grew by " +
         s"${registrySize - before} after $rounds rounds)")
-    Lifetime.free(labels)
+    Lifetime.sweep(spark)
     assert(registrySize == before)
   }
 
@@ -100,7 +120,7 @@ class LifetimeSpec extends SparkSpec {
     assert(registrySize == before + 1,
       s"semantic-exact must free class/rep/level checkpoints " +
         s"(registry grew by ${registrySize - before})")
-    Lifetime.free(pairs)
+    Lifetime.sweep(spark)
     assert(registrySize == before)
   }
 

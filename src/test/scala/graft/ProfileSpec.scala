@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 class ProfileSpec extends SparkSpec {
-  private val names = Seq("q_dedup_minhash", "q_no_such_query", "q_a3_directory")
+  private val names =
+    Seq("q_dedup_minhash", "q_no_such_query", "q_a3_directory", "q_graph_bfs")
 
   private lazy val reports: Map[String, JsonNode] = {
     val out = Files.createTempDirectory("graft_profile")
@@ -49,6 +50,24 @@ class ProfileSpec extends SparkSpec {
       .map(_.get("name").asText())
     assert(names.nonEmpty && names.forall(n => n.contains("Dedup.scala") &&
       !n.contains("CompletableFuture.java")), names.mkString("\n"))
+  }
+
+  test("every stage of every localCheckpoint execution names its seal") {
+    // the stage table reads on its own: no AQE stage of an eager
+    // materialization falls back to the CompletableFuture frame
+    Seq("q_graph_bfs", "q_dedup_minhash").foreach { q =>
+      val r = rep(q)
+      val seals = r.get("executions").asScala
+        .filter(_.get("action").asText() == "localCheckpoint")
+        .map(_.get("id").asLong()).toSet
+      val names = r.get("stages").asScala
+        .filter(s => !s.get("execution").isNull &&
+          seals(s.get("execution").asLong()))
+        .map(_.get("name").asText()).toSeq
+      assert(seals.nonEmpty && names.nonEmpty, s"$q: no seal stages")
+      assert(names.forall(_.matches("""seal at \w+\.scala:\d+""")),
+        s"$q:\n${names.mkString("\n")}")
+    }
   }
 
   test("an unknown name writes an error entry and the sweep goes on") {
