@@ -12,7 +12,8 @@ import graft.transform.Transforms
   * (SURVEY §3.1-3.2): parse args, XOR-validate the single-vs-multi request
   * config (S6, `PurpleAirDataLogger.py:217-245`), optionally drop existing
   * data behind an explicit gate (T8), then run the poll→flatten→conform→
-  * fan-out pipeline as one Structured Streaming query.
+  * fan-out pipeline, hourly rollup and retention included, as one
+  * Structured Streaming query ([[runStream]]).
   *
   * Sink selection replaces the reference's three near-identical classes:
   * `parquet` (the scale path), `csv` (K3-compatible layout), or a JDBC URL
@@ -182,26 +183,20 @@ object DataLoggerCli {
     conformed.select("data_time_stamp", "sensor_index").distinct().count()
   }
 
-  /** One tick of the T5 retention policy — the exact body the background
-    * timer fires hourly, exposed so the streaming e2e spec can run a
-    * tick synchronously instead of waiting an hour. Returns partitions
-    * dropped. */
-  def runRetentionOnce(spark: SparkSession, aggDir: String,
-      retainHours: Int): Int =
-    graft.streaming.ContinuousAggregate.retentionDrop(spark, aggDir,
-      new java.sql.Timestamp(System.currentTimeMillis()), retainHours)
-
   /** Retention ticks that failed since the JVM started. */
   val retentionFailures = new java.util.concurrent.atomic.AtomicLong()
 
-  /** What the background timer runs: [[runRetentionOnce]], with a failure
-    * logged (directory, horizon, cause) and counted in
-    * [[retentionFailures]] — the next tick retries, and a throw out of a
-    * `TimerTask` would cancel the timer for good. */
+  /** One tick of the T5 retention policy, which each micro-batch runs
+    * after its rollup write: drop the date partitions past the horizon
+    * from now. A failure is logged (directory, horizon, cause) and
+    * counted in [[retentionFailures]]; it never fails the batch, and the
+    * next batch's tick retries. */
   def retentionTick(spark: SparkSession, aggDir: String,
       retainHours: Int): Unit =
-    try { val _ = runRetentionOnce(spark, aggDir, retainHours) }
-    catch {
+    try {
+      val _ = graft.streaming.ContinuousAggregate.retentionDrop(spark, aggDir,
+        new java.sql.Timestamp(System.currentTimeMillis()), retainHours)
+    } catch {
       case scala.util.control.NonFatal(e) =>
         val n = retentionFailures.incrementAndGet()
         log.warn(s"retention tick failed on $aggDir (horizon " +
@@ -210,14 +205,14 @@ object DataLoggerCli {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** The full reference loop shape as ONE invocation — poll source (S5)
-    * → flatten/zip → conform → 9-way fan-out (K1–K3/O3) plus, when
-    * configured, the hourly continuous aggregate (A2) with its
-    * background retention policy (T5). Returns every started query so
-    * the caller owns the lifecycle: `main` awaits any termination, the
-    * e2e spec drives `processAllAvailable` and stops them. */
+  /** The full reference loop as ONE streaming query: poll (S5) →
+    * flatten/zip → conform → 9-way fan-out (K1–K3/O3), each micro-batch
+    * then writing its run of the hourly aggregate (A2) and a retention
+    * tick (T5) when configured. So a poll is one GET and a start one
+    * `/keys` check. The caller owns the query: `main` awaits it, the
+    * specs drive `processAllAvailable` and stop it. */
   def runStream(spark: SparkSession, c: Config)
-      : Seq[org.apache.spark.sql.streaming.StreamingQuery] = {
+      : org.apache.spark.sql.streaming.StreamingQuery = {
     val reader = spark.readStream.format(PollingSource.format)
       .option(PollingSource.Options.FetcherClass, c.fetcherClass)
       .option(PollingSource.Options.MinPollIntervalSeconds, c.pollSeconds.toString)
@@ -249,45 +244,14 @@ object DataLoggerCli {
     val jdbcProps = new java.util.Properties()
     c.jdbcUser.foreach(jdbcProps.setProperty("user", _))
     c.jdbcPassword.foreach(jdbcProps.setProperty("password", _))
-    val query = FanOutSink.stream(conformed, c.outDir, c.checkpointDir,
+    FanOutSink.stream(conformed, c.outDir, c.checkpointDir,
       format = c.sink,
       trigger = Trigger.ProcessingTime(s"${c.pollSeconds} seconds"),
       jdbcProperties = jdbcProps,
-      compactEveryBatches = c.compactEveryBatches)
-
-    // The reference's continuous aggregate (A2): a second streaming query
-    // over the same source maintaining the watermarked 1 h rollup —
-    // TimescaleDB's materialized view + refresh policy as one append-mode
-    // windowed aggregation.
-    val aggQuery = c.hourlyAggregateDir.map { aggDir =>
-      import org.apache.spark.sql.functions.{col, to_date}
-      val q = graft.streaming.ContinuousAggregate
-        .hourly(conformed, "data_time_stamp", Seq("sensor_index", "name"), "pm2_5")
-        .withColumn("date", to_date(col("bucket_ts")))
-        .writeStream
-        .option("checkpointLocation", s"${c.checkpointDir}_hourly")
-        .outputMode("append")
-        .trigger(Trigger.ProcessingTime(s"${c.pollSeconds} seconds"))
-        .format("parquet")
-        // date-partitioned so the 8 h retention policy is a partition
-        // drop (ContinuousAggregate.retentionDrop), like the reference's
-        // chunk-drop retention job
-        .partitionBy("date")
-        .option("path", aggDir)
-        .start()
-
-      // T5 as a background policy job (the reference's
-      // add_retention_policy): hourly partition drops past the horizon.
-      if (c.retentionHours > 0) {
-        val timer = new java.util.Timer("graft-retention", true)
-        timer.scheduleAtFixedRate(new java.util.TimerTask {
-          override def run(): Unit =
-            retentionTick(spark, aggDir, c.retentionHours)
-        }, 3600L * 1000L, 3600L * 1000L)
-      }
-      q
-    }
-    Seq(query) ++ aggQuery
+      compactEveryBatches = c.compactEveryBatches,
+      hourlyAggregateDir = c.hourlyAggregateDir,
+      afterRollup = dir =>
+        if (c.retentionHours > 0) retentionTick(spark, dir, c.retentionHours))
   }
 
   def main(args: Array[String]): Unit = {
@@ -318,8 +282,6 @@ object DataLoggerCli {
       return
     }
 
-    val queries = runStream(spark, c)
-    spark.streams.awaitAnyTermination()
-    val _ = queries
+    runStream(spark, c).awaitTermination()
   }
 }

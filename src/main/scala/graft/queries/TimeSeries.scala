@@ -63,13 +63,6 @@ object TimeSeries {
       .agg(max(col(measure)).as("max_value"),
            count(lit(1)).as("n"))
 
-  /** A2 (batch form) — the hourly rollup behind the reference's continuous
-    * aggregate: 1-hour bucket × group key, count + exact sum. The streaming
-    * form lives in [[graft.streaming.ContinuousAggregate]]. */
-  def hourlyRollup(df: DataFrame, ts: String, key: String, measure: String): DataFrame =
-    df.groupBy(date_trunc("hour", col(ts)).as("bucket_ts"), col(key))
-      .agg(count(lit(1)).as("n"), exactSum(col(measure)).as("sum_value"))
-
   /** A5/S3 — historic server-side average: `average ∈ {0,10,30,60,360,1440}`
     * minutes over a time range (`PurpleAirAPI.py:244-305`). Range bounds are
     * half-open `[start, end)` like the reference. `minutes = 0` is the

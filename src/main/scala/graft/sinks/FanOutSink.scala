@@ -36,6 +36,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.schema.FieldCatalog
+import graft.streaming.ContinuousAggregate
 import graft.transform.Transforms
 
 /** The 9-way fan-out sink (SURVEY §2.9 K1-K3 + §2.7 T3/T6/T7): one
@@ -124,17 +125,31 @@ object FanOutSink {
     * appends are not rewindable; per-table markers mean a crash mid-loop
     * replays only the tables whose marker is missing, closing the
     * duplicate window to a crash between ONE table's commit and its
-    * marker write, not the whole 9-table batch). */
+    * marker write, not the whole 9-table batch).
+    *
+    * With `hourlyAggregateDir`, each batch then writes its run of the
+    * hourly rollup ([[ContinuousAggregate.writeRun]]) from what it landed
+    * (files: two tables read back; JDBC: the deduped frame), never
+    * reading the micro-batch frame twice: each read fetches the poll
+    * again. `afterRollup(dir)` follows each write. */
   def stream(conformed: DataFrame, baseDir: String, checkpointDir: String,
       format: String = "parquet",
       trigger: Trigger = Trigger.ProcessingTime("65 seconds"),
       jdbcProperties: java.util.Properties = new java.util.Properties(),
       compactEveryBatches: Int = 0,
-      epochTextCompat: Boolean = false): StreamingQuery =
+      epochTextCompat: Boolean = false,
+      hourlyAggregateDir: Option[String] = None,
+      afterRollup: String => Unit = _ => ()): StreamingQuery = {
+    require(!epochTextCompat || hourlyAggregateDir.isEmpty,
+      "the hourly rollup reads typed timestamps; epochTextCompat writes text")
     conformed.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        def rollup(landed: => DataFrame): Unit = hourlyAggregateDir.foreach { dir =>
+          ContinuousAggregate.writeRun(landed, dir, batchId)
+          afterRollup(dir)
+        }
         if (format.startsWith("jdbc:")) {
           val markerDir = new org.apache.hadoop.fs.Path(
             s"$checkpointDir/_graft_jdbc_committed/$batchId")
@@ -150,11 +165,13 @@ object FanOutSink {
           if (!legacyCommitted)
             writeBatchJdbc(batch, format, jdbcProperties,
               markers = Some((fs, markerDir)),
-              epochTextCompat = epochTextCompat)
+              epochTextCompat = epochTextCompat, landed = rollup(_))
         } else {
           writeBatch(batch, baseDir, format, batchId = Some(batchId))
+          rollup(landedRun(batch.sparkSession, baseDir, format, batchId))
           // The compression/compaction policy riding the micro-batch
           // clock (parquet only — csv layouts append per batch already).
+          // It folds `batch=<id>`, so it runs after the rollup read it.
           if (compactEveryBatches > 0 && format == "parquet" &&
               batchId > 0 && batchId % compactEveryBatches == 0) {
             val _ = compactAll(batch.sparkSession, baseDir)
@@ -162,12 +179,28 @@ object FanOutSink {
         }
       }
       .start()
+  }
+
+  /** The keys, `name` and `pm2_5` of every reading the run `batch=<id>`
+    * landed, read back from two of its nine tables. */
+  private def landedRun(spark: SparkSession, baseDir: String, format: String,
+      batchId: Long): DataFrame = {
+    def run(table: String, column: String) =
+      spark.read.schema(FieldCatalog.groupSchema(table))
+        .option("header", "true") // csv runs carry one; others ignore it
+        .format(format).load(s"$baseDir/$table/batch=$batchId")
+        .select((FieldCatalog.keyCols :+ column).map(col): _*)
+    run(FieldCatalog.Groups.Station, "name")
+      .join(run(FieldCatalog.Groups.Pm2_5, "pm2_5"), FieldCatalog.keyCols)
+  }
 
   /** JDBC fan-out (K1/K2): one append per projection per micro-batch —
     * the reference's 9 INSERTs, batched. Driver jar must be on the
     * classpath (e2e-tested against embedded Derby). With `markers`, each
     * table's append is skipped when its marker file exists and marked
     * committed right after it lands — the streaming replay guard.
+    * `landed` is called with the deduped frame the appends wrote, before
+    * it is released.
     *
     * `epochTextCompat = true` is the SQLite compatibility mode: the
     * reference's SQLite DDL declares every timestamp column TEXT
@@ -186,7 +219,8 @@ object FanOutSink {
       props: java.util.Properties,
       markers: Option[(org.apache.hadoop.fs.FileSystem,
         org.apache.hadoop.fs.Path)] = None,
-      epochTextCompat: Boolean = false): Unit = {
+      epochTextCompat: Boolean = false,
+      landed: DataFrame => Unit = _ => ()): Unit = {
     val compat =
       if (!epochTextCompat) conformed
       else conformed.schema.fields.foldLeft(conformed) { (d, f) =>
@@ -201,17 +235,20 @@ object FanOutSink {
     val deduped = Transforms
       .dedupByKey(compat, Transforms.stableDedupOrder(compat))
       .persist()
-    try Transforms.verticalSplit(deduped).foreach { case (table, part) =>
-      val marker = markers.map { case (_, dir) =>
-        new org.apache.hadoop.fs.Path(dir, table) }
-      val committed = markers.exists { case (fs, _) => fs.exists(marker.get) }
-      if (!committed) {
-        part.write.mode(SaveMode.Append).jdbc(url, table, props)
-        markers.foreach { case (fs, dir) =>
-          fs.mkdirs(dir)
-          fs.create(marker.get, true).close()
+    try {
+      Transforms.verticalSplit(deduped).foreach { case (table, part) =>
+        val marker = markers.map { case (_, dir) =>
+          new org.apache.hadoop.fs.Path(dir, table) }
+        val committed = markers.exists { case (fs, _) => fs.exists(marker.get) }
+        if (!committed) {
+          part.write.mode(SaveMode.Append).jdbc(url, table, props)
+          markers.foreach { case (fs, dir) =>
+            fs.mkdirs(dir)
+            fs.create(marker.get, true).close()
+          }
         }
       }
+      landed(deduped)
     } finally deduped.unpersist()
   }
 

@@ -54,46 +54,112 @@ class CliSpec extends SparkSpec {
     assert(DataLoggerCli.retentionFailures.get() == before + 1)
   }
 
-  test("streaming e2e: poll → conform → 9-way fan-out → hourly aggregate " +
-      "→ retention, one CLI invocation (S5/A2/T5/K3)") {
-    Payloads.assumeReferenceSamples()
-    val outDir = tmp("cli_out")
-    val cpDir = tmp("cli_cp")
-    val aggDir = s"${tmp("cli_agg")}/agg"
+  /** A parsed CLI config that replays `replayDir` through the hourly
+    * rollup into fresh directories. */
+  private def streamConfig(replayDir: String, extra: String*) = {
     val cfgDir = tmp("cli_cfg")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$cfgDir/req.json"),
       """{"sensor_index": 53, "fields": "humidity,pm2.5_atm"}""")
-    // the reference loop, configured exactly as an operator would run it
-    // (65 s cadence, hourly rollup, 8 h retention) — only the transport
-    // is the replay fetcher over the reference's own hardware samples
-    val c = DataLoggerCli.parseArgs(Array(
+    // the reference loop, configured as an operator would run it (65 s
+    // cadence, hourly rollup) — only the transport is the replay fetcher
+    DataLoggerCli.parseArgs(Array(
       "-paa_single_sensor_request_json_file", s"$cfgDir/req.json",
       "-fetcher_class", classOf[graft.sources.FileReplayFetcher].getName,
-      "-replay_dir", Payloads.ReferenceSamples,
-      "-out_dir", outDir, "-checkpoint_dir", s"$cpDir/cp",
+      "-replay_dir", replayDir,
+      "-out_dir", tmp("cli_out"), "-checkpoint_dir", s"${tmp("cli_cp")}/cp",
       "-sink", "parquet", "-poll_seconds", "65",
-      "-hourly_aggregate_dir", aggDir, "-retention_hours", "8"))
-    val queries = DataLoggerCli.runStream(spark, c)
+      "-hourly_aggregate_dir", s"${tmp("cli_agg")}/agg") ++ extra)
+  }
+
+  /** Hour buckets of the rollup, as epoch seconds, and whether every
+    * bucket counts one reading. */
+  private def hourlyBuckets(aggDir: String): (Set[Long], Boolean) = {
+    val agg = graft.streaming.ContinuousAggregate.readHourly(spark, aggDir)
+      .select(col("bucket_ts").cast("long"), col("n")).collect()
+    (agg.map(_.getLong(0)).toSet, agg.forall(_.getLong(1) == 1L))
+  }
+
+  test("streaming e2e: poll → conform → 9-way fan-out → hourly aggregate " +
+      "→ retention, one CLI invocation (S5/A2/T5/K3)") {
+    // the synthetic payloads date from June 2024: a horizon from then to
+    // now plus two days keeps their date partitions through each tick
+    val keepAll = (System.currentTimeMillis() / 1000 - 1717243265L) / 3600 + 48
+    val c = streamConfig(Payloads.fixtureDir,
+      "-retention_hours", keepAll.toString)
+    val aggDir = c.hourlyAggregateDir.get
+    val active = spark.streams.active.length
+    val query = DataLoggerCli.runStream(spark, c)
     try {
-      assert(queries.length == 2, "fan-out + continuous aggregate")
-      queries.foreach(_.processAllAvailable())
+      assert(spark.streams.active.length == active + 1,
+        "one query: the rollup rides the fan-out")
+      awaitFirstTrigger(query)
 
       // K3/O3: all nine vertical partitions landed all three payloads
+      val sensors = Set(900001, 900002, 900003)
+      FieldCatalog.Groups.all.foreach { group =>
+        val t = graft.sinks.FanOutSink.readTable(spark, c.outDir, group)
+        val got = t.select("sensor_index").collect().map(_.getInt(0)).toSet
+        assert(got == sensors, s"$group landed $got")
+      }
+
+      // A2: every hour a batch landed a reading in has its row, the
+      // newest hour included — no watermark holds it back in state
+      val (buckets, oneEach) = hourlyBuckets(aggDir)
+      val expect = Set(1717243265L, 1717329710L, 1717416145L)
+        .map(t => t - t % 3600)
+      assert(buckets == expect, s"hourly buckets: $buckets")
+      assert(oneEach, "one reading per bucket")
+
+      // T5: the retention drop at the 8 h horizon from now removes the
+      // three long-expired date partitions — a directory delete, not a
+      // scan
+      val dropped = graft.streaming.ContinuousAggregate.retentionDrop(spark,
+        aggDir, new java.sql.Timestamp(System.currentTimeMillis()), 8)
+      assert(dropped == 3, s"expected all date partitions dropped: $dropped")
+      val left = new java.io.File(aggDir).listFiles()
+        .filter(_.getName.startsWith("date=")).toSeq
+      assert(left.isEmpty, s"date partitions must be gone: $left")
+
+      // F3 crash-restart: stop the query, relaunch the SAME CLI config
+      // against the same checkpoint — the poll cursor restores from the
+      // offset log (not the static start option), so the committed
+      // payloads are never re-fetched and the replay-safe sink never
+      // duplicates
+      query.stop()
+      val resumed = DataLoggerCli.runStream(spark, c)
+      try {
+        awaitFirstTrigger(resumed)
+        FieldCatalog.Groups.all.foreach { group =>
+          val n = graft.sinks.FanOutSink.readTable(spark, c.outDir, group)
+            .count()
+          assert(n == 3L, s"$group must not grow across a restart: $n")
+        }
+      } finally resumed.stop()
+    } finally if (query.isActive) query.stop()
+  }
+
+  test("streaming e2e on the reference samples: the real readings land " +
+      "and roll up") {
+    Payloads.assumeReferenceSamples()
+    val c = streamConfig(Payloads.ReferenceSamples)
+    val query = DataLoggerCli.runStream(spark, c)
+    try {
+      awaitFirstTrigger(query)
       val sensors = Set(53, 14867, 147883)
       FieldCatalog.Groups.all.foreach { group =>
-        val t = graft.sinks.FanOutSink.readTable(spark, outDir, group)
+        val t = graft.sinks.FanOutSink.readTable(spark, c.outDir, group)
         val got = t.select("sensor_index").collect().map(_.getInt(0)).toSet
         assert(got == sensors, s"$group landed $got")
       }
 
       // the dashboard reads back what the reference's Grafana SQL shows:
       // the sensor directory and the July environmental panel
-      val station = graft.sinks.FanOutSink.readTable(spark, outDir,
+      val station = graft.sinks.FanOutSink.readTable(spark, c.outDir,
         FieldCatalog.Groups.Station)
       assert(graft.queries.Dashboard.sensorDirectory(station)
         .count() == 3L)
-      val env = graft.sinks.FanOutSink.readTable(spark, outDir,
+      val env = graft.sinks.FanOutSink.readTable(spark, c.outDir,
         FieldCatalog.Groups.Environmental)
       val panel = graft.queries.Dashboard.panel(env,
         FieldCatalog.Groups.Environmental, "1 hour", 147883,
@@ -101,42 +167,16 @@ class CliSpec extends SparkSpec {
       assert(panel.length == 1 &&
         panel(0).getAs[Int]("temperature") == 77, panel.toSeq)
 
-      // A2: the two July hours are past the 2 h watermark set by the
-      // September payload and must have FINALIZED into the aggregate;
-      // the newest hour correctly stays open in state
-      val agg = spark.read.parquet(aggDir)
-      val buckets = agg.select(col("bucket_ts").cast("long")).collect()
-        .map(_.getLong(0)).toSet
-      val expect = Set(1658588700L, 1658811226L).map(t => t - t % 3600)
-      assert(buckets == expect, s"finalized hourly buckets: $buckets")
-      assert(agg.select("n", "sum_value").collect()
-        .forall(r => r.getLong(0) == 1L), "one reading per bucket")
-
-      // T5: one synchronous tick of the CLI's own retention policy body
-      // drops both long-expired date partitions — a directory delete,
-      // not a scan
-      val dropped = DataLoggerCli.runRetentionOnce(spark, aggDir, 8)
-      assert(dropped == 2, s"expected both date partitions dropped: $dropped")
-      val left = new java.io.File(aggDir).listFiles()
-        .filter(_.getName.startsWith("date=")).toSeq
-      assert(left.isEmpty, s"date partitions must be gone: $left")
-
-      // F3 crash-restart: stop both queries, relaunch the SAME CLI
-      // config against the same checkpoints — the poll cursor restores
-      // from the offset log (not the static start option), so the
-      // already-committed payloads are never re-fetched and the
-      // replay-safe sink never duplicates
-      queries.foreach(_.stop())
-      val resumed = DataLoggerCli.runStream(spark, c)
-      try {
-        resumed.foreach(_.processAllAvailable())
-        FieldCatalog.Groups.all.foreach { group =>
-          val n = graft.sinks.FanOutSink.readTable(spark, outDir, group)
-            .count()
-          assert(n == 3L, s"$group must not grow across a restart: $n")
-        }
-      } finally resumed.foreach(_.stop())
-    } finally queries.foreach(q => if (q.isActive) q.stop())
+      // A2: the two July hours and the newest (September) hour all have
+      // their row; the newest no longer waits in state for a watermark
+      val (buckets, oneEach) = hourlyBuckets(c.hourlyAggregateDir.get)
+      val landed = station.select(col("data_time_stamp").cast("long"))
+        .collect().map(r => r.getLong(0) - r.getLong(0) % 3600).toSet
+      val july = Set(1658588700L, 1658811226L).map(t => t - t % 3600)
+      assert(buckets == landed && buckets.size == 3 &&
+        july.subsetOf(buckets), s"hourly buckets: $buckets")
+      assert(oneEach, "one reading per bucket")
+    } finally query.stop()
   }
 
   test("backfill e2e: stubbed history endpoint → conformed fan-out layout") {

@@ -25,6 +25,8 @@ object Payloads {
   /** `stats` and `stats_a` but no `stats_b`; no `_b` measures, no
     * environmental fields. */
   def singleChannel: String = s"$fixtureDir/single_channel.json"
+  /** `stats`, `stats_a` and `stats_b`: both channels' measures. */
+  def dualChannel: String = s"$fixtureDir/dual_channel.json"
   /** Every catalog field present, per-channel environmental triplets and
     * the `last_seen` / `last_modified` / `date_created` epochs included. */
   def dualChannelFullEnv: String = s"$fixtureDir/dual_channel_full_env.json"

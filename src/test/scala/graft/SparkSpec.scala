@@ -48,6 +48,19 @@ trait SparkSpec extends AnyFunSuite {
       seen.asScala.toSeq
     } finally spark.listenerManager.unregister(listener)
   }
+
+  /** Waits until `q`'s first trigger has run and committed. A poll source
+    * hands one trigger every payload its rate limit allows, so that
+    * trigger takes them all; `processAllAvailable` would also wait for
+    * the next, empty trigger, up to one 65 s interval later. */
+  def awaitFirstTrigger(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    val deadline = System.nanoTime() + 120L * 1000000000L
+    while (q.lastProgress == null) {
+      q.exception.foreach(e => throw e)
+      assert(q.isActive && System.nanoTime() < deadline, "no trigger finished")
+      Thread.sleep(20)
+    }
+  }
 }
 
 object SparkSpec {

@@ -390,37 +390,6 @@ class ContinuousAggregateSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming session windows: gap splits sessions, append on close") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, Int, Double)]
-    val df = input.toDF().toDF("epoch", "sensor_index", "value")
-      .withColumn("data_time_stamp", timestamp_seconds(col("epoch")))
-    val agg = ContinuousAggregate.sessions(
-      df, "data_time_stamp", Seq("sensor_index"), "value",
-      gap = "30 minutes", watermarkDelay = "1 hour")
-    val cp = Files.createTempDirectory("graft_sess").toString
-    val q = agg.writeStream.format("memory").queryName("sess_out")
-      .option("checkpointLocation", cp).outputMode("append").start()
-    try {
-      val t0 = 1700000000L
-      // two bursts 2h apart -> two sessions for sensor 1
-      input.addData((t0, 1, 1.0), (t0 + 60, 1, 2.0))
-      q.processAllAvailable()
-      input.addData((t0 + 7200, 1, 3.0))
-      q.processAllAvailable()
-      // advance the watermark far enough to close both sessions
-      input.addData((t0 + 30000, 1, 0.0))
-      q.processAllAvailable()
-      val sessions = spark.table("sess_out")
-        .filter(col("sensor_index") === 1 && col("n_events") > 0)
-        .orderBy("session_start").collect()
-      assert(sessions.length >= 2)
-      assert(sessions(0).getAs[Long]("n_events") == 2L)
-      assert(sessions(0).getAs[Double]("sum_value") == 3.0)
-      assert(sessions(1).getAs[Long]("n_events") == 1L)
-    } finally q.stop()
-  }
-
   test("streaming calibration: prefix-deterministic gate, replay idempotent") {
     import graft.streaming.StreamingCalibration
     val dir = Files.createTempDirectory("graft_cal").toString
